@@ -44,10 +44,6 @@ def parse_args() -> argparse.Namespace:
     p.add_argument("--seed-spread-hosts", type=int, default=0)
     p.add_argument("--budget-scale", type=float, default=1.0)
     p.add_argument("--arrow-batch-rows", type=int, default=4096)
-    p.add_argument("--seen-filter", choices=("bloom", "cuckoo"),
-                   default="bloom",
-                   help="URL-seen pre-filter backend (config_hash-"
-                        "guarded: a resumed --root must use the same)")
     return p.parse_args()
 
 
@@ -68,7 +64,6 @@ def main() -> None:
         seed_spread_hosts=args.seed_spread_hosts,
         budget_scale=args.budget_scale,
         arrow_batch_rows=args.arrow_batch_rows,
-        seen_filter=args.seen_filter,
     )
     cat = run_crawl(spark, args.root, cfg)
     snap = cat.load_snapshot()

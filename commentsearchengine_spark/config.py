@@ -28,16 +28,6 @@ class EngineConfig:
     # filter tracks its frontier instead of saturating (plan-only knob)
     bloom_nbits: int = 1 << 20
     bloom_k: int = 5
-    # URL-seen pre-filter backend: "bloom" (default — insert-only
-    # workload, ~17 bits/key; operators/bloom.py) or "cuckoo" (the
-    # spec's other option — supports deletion, ~32 bits/key at its load
-    # target; operators/cuckoo.py).  Crawl results are bit-identical
-    # under either (exactness is op B3's job), but the knob is
-    # DELIBERATELY part of config_hash: the stored shard bytes are
-    # backend-specific, so resuming a crawl under the other backend
-    # would misread them as false negatives — the resume guard must
-    # refuse.
-    seen_filter: str = "bloom"
     # probe strategy switch (operators/bloom.py): filters up to this total
     # size broadcast to workers (shuffle-free probe); larger ones cogroup
     # per shard.  Does not affect results, only the physical plan.

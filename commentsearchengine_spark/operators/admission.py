@@ -64,16 +64,9 @@ def admit_pruned(spark, cat, hosts: DataFrame, schema_ddl: str,
                  head_factor: int = 4,
                  persists: list | None = None,
                  want: int | None = None,
-                 entries: list[dict] | None = None,
                  timings: dict | None = None) -> DataFrame:
-    """Q1 with manifest pruning: rank only the frontier's plausible head.
-
-    ``entries`` overrides the frontier file list (manifest entries with
-    per-file stats).  The default reads the CURRENT committed snapshot;
-    the wave loop's overlapped next-wave admission passes the STAGED
-    list instead (icelite.Catalog.staged_entries) — identical files to
-    what the imminent commit pins, so the result is bit-identical to
-    running after the commit.
+    """Q1 with manifest pruning: rank only the frontier's plausible head
+    of the CURRENT committed snapshot.
 
     Pass 1 scans just the frontier files whose min priority lies under a
     cut chosen to cover ``head_factor`` x the wave's total admission
@@ -118,8 +111,7 @@ def admit_pruned(spark, cat, hosts: DataFrame, schema_ddl: str,
         _mark("want_job_sec", t0)
     from ..sources.icelite import _may_match
 
-    if entries is None:
-        entries = cat.table_files("frontier")
+    entries = cat.table_files("frontier")
     cut = choose_cut(entries, int(want) * head_factor)
     if timings is not None:
         timings["cut"] = cut
@@ -214,7 +206,7 @@ def assign_global_seq(admitted: DataFrame, base: int,
     ONE ROW PER DISTINCT PREFIX — bounded by host-name diversity, not
     host count (10^7 admitted hosts with realistic names collapse to
     ~10^3–10^5 prefix rows of 16 bytes).  Degenerate case (every host
-    shares one prefix) degrades to the old single-task behaviour, never
+    shares one prefix) degrades to a single-task prefix sum, never
     to wrong answers.  offset(host) = range_base + within_range_prefix.
     """
     counts = admitted.groupBy("host").agg(

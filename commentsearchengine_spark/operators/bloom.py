@@ -15,11 +15,10 @@ bounded).  Exactness is NOT bloom's job: op B3 (left_anti against the
 ``seen`` table) guarantees the exact URL-seen semantics; bloom only
 spares "definitely new" rows that shuffle.
 
-Bloom (not cuckoo) is chosen deliberately: the URL-seen set is
-insert-only (no deletions ever), bitmaps OR-merge trivially across
-waves and shards, and the exactness backstop makes the FPR a pure
-performance knob.  A cuckoo filter's only advantage — deletion — is
-unused here (SURVEY §2.A note).
+Bloom is the URL-seen filter because the seen set is insert-only
+(nothing ever expires a key, so a cuckoo filter's deletion would go
+unused), bitmaps OR-merge trivially across waves and shards, and the
+exactness backstop makes the FPR a pure performance knob.
 """
 
 from __future__ import annotations
@@ -159,35 +158,17 @@ def probe(candidates: DataFrame, shards: DataFrame,
     compute wrong bit positions and produce false negatives — the one
     failure mode bloom must never have.
     """
-    k = cfg.bloom_k
+    k, n_shards = cfg.bloom_k, cfg.bloom_shards
     nbits = cfg.bloom_nbits if nbits is None else nbits
-    return probe_generic(
-        candidates, shards, cfg, broadcasts,
-        total_bytes=cfg.bloom_shards * (nbits // 8),
-        decode=lambda b: np.frombuffer(b, dtype=np.uint8),
-        contains=lambda bits, uh: _check_bits(bits, uh, nbits, k))
-
-
-def probe_generic(candidates: DataFrame, shards: DataFrame,
-                  cfg: EngineConfig, broadcasts: list | None,
-                  total_bytes: int, decode, contains) -> DataFrame:
-    """The backend-agnostic half of probe(): the broadcast-vs-cogroup
-    strategy switch, the pmod shard routing, the missing-shard ⇒
-    definitely-new convention, and the broadcasts-list contract — shared
-    by the bloom and cuckoo backends so the physical scaffolding exists
-    once.  ``decode(bytes) -> state`` deserializes one shard's stored
-    ``bits`` and ``contains(state, url_hashes) -> bool[n]`` is the
-    membership kernel; both close over their backend's geometry."""
-    n_shards = cfg.bloom_shards
     out_schema = StructType(
         candidates.schema.fields + [StructField("maybe_seen", BooleanType())])
 
-    if total_bytes <= cfg.bloom_broadcast_max_bytes:
-        states = {
-            int(r["shard"]): decode(bytes(r["bits"]))
+    if n_shards * (nbits // 8) <= cfg.bloom_broadcast_max_bytes:
+        bitmaps = {
+            int(r["shard"]): np.frombuffer(bytes(r["bits"]), dtype=np.uint8)
             for r in shards.collect()
         }
-        bc = candidates.sparkSession.sparkContext.broadcast(states)
+        bc = candidates.sparkSession.sparkContext.broadcast(bitmaps)
         if broadcasts is not None:
             broadcasts.append(bc)
 
@@ -199,11 +180,11 @@ def probe_generic(candidates: DataFrame, shards: DataFrame,
                 sh = (uh % n_shards + n_shards) % n_shards  # pmod
                 maybe = np.zeros(len(pdf), dtype=bool)
                 for s in np.unique(sh):
-                    state = bc.value.get(int(s))
-                    if state is None:
-                        continue
+                    bits = bc.value.get(int(s))
+                    if bits is None:
+                        continue  # never-built shard: definitely new
                     m = sh == s
-                    maybe[m] = contains(state, uh[m])
+                    maybe[m] = _check_bits(bits, uh[m], nbits, k)
                 pdf["maybe_seen"] = maybe
                 yield pdf
 
@@ -220,9 +201,9 @@ def probe_generic(candidates: DataFrame, shards: DataFrame,
         if not len(shard_pdf):
             cand_pdf["maybe_seen"] = False
             return cand_pdf
-        state = decode(bytes(shard_pdf["bits"].iloc[0]))
-        cand_pdf["maybe_seen"] = contains(
-            state, cand_pdf["url_hash"].to_numpy())
+        bits = np.frombuffer(bytes(shard_pdf["bits"].iloc[0]), dtype=np.uint8)
+        cand_pdf["maybe_seen"] = _check_bits(
+            bits, cand_pdf["url_hash"].to_numpy(), nbits, k)
         return cand_pdf
 
     return (

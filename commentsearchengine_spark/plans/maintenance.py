@@ -17,11 +17,9 @@ current and only orphans unreachable files).
 This is a BETWEEN-WAVES maintenance op (like Iceberg table
 maintenance).  It never runs inside a wave; the crawl loop optionally
 invokes it between waves on a ``seen_compact_every`` cadence
-(plans/wave.py — a maintenance commit touches only the compacted
-table, so a pending speculative admission adopts unaffected), and
-crawl parity and resume guarantees are untouched either way: tests
-assert row-level content equality, improved stats tightness, and full
-oracle parity through and across compactions.
+(plans/wave.py), and crawl parity and resume guarantees are untouched
+either way: tests assert row-level content equality, improved stats
+tightness, and full oracle parity through and across compactions.
 """
 
 from __future__ import annotations

@@ -80,7 +80,7 @@ from .. import schemas
 from ..config import DISC_SEQ_STRIDE, EngineConfig
 from ..fixtures import synth
 from ..functions.spark_cols import bucket_col, murmur64_col, seed_urls_df
-from ..operators import admission, bloom, cuckoo
+from ..operators import admission, bloom
 from ..operators.canonicalize import with_canonical
 from ..operators.dedup import dedup_within_wave, make_host_budget_udf
 from ..operators.robots import aggregate_rules, robots_table, with_robots_verdict
@@ -88,20 +88,6 @@ from ..sources import icelite
 from ..sources.icelite import Catalog
 
 FRONTIER_COLS = [c.split(" ")[0] for c in schemas.FRONTIER.split(", ")]
-
-
-def _seen_filter(cfg: EngineConfig):
-    """URL-seen pre-filter backend (ops B1/B2).  Both modules export the
-    identical sized_nbits/build_shards/probe surface over the same
-    ``bloom_shards`` table schema, so everything below dispatches
-    through this one name; ``seen_filter`` is part of config_hash, so
-    the resume guard refuses to reinterpret one backend's stored shard
-    bytes as the other's (which would manufacture false negatives)."""
-    if cfg.seen_filter == "cuckoo":
-        return cuckoo
-    if cfg.seen_filter == "bloom":
-        return bloom
-    raise ValueError(f"unknown seen_filter {cfg.seen_filter!r}")
 
 
 def _lineage_singlepass(wave: int, n_buckets: int,
@@ -212,10 +198,9 @@ def bootstrap(spark: SparkSession, cat: Catalog, cfg: EngineConfig) -> int:
     # candidates skip the exact frontier anti-join, not just seen's.
     # Initial bitmap size comes from the seed count (upper bound on
     # wave-0 keys); waves grow it as the discovered set grows.
-    filt = _seen_filter(cfg)
-    nbits0 = filt.sized_nbits(cfg.n_seeds, cfg, cfg.bloom_nbits)
+    nbits0 = bloom.sized_nbits(cfg.n_seeds, cfg, cfg.bloom_nbits)
     empty_shards = spark.createDataFrame([], schemas.BLOOM_SHARDS)
-    shards0 = filt.build_shards(frontier, empty_shards, cfg, nbits=nbits0)
+    shards0 = bloom.build_shards(frontier, empty_shards, cfg, nbits=nbits0)
 
     from concurrent.futures import ThreadPoolExecutor
 
@@ -256,25 +241,7 @@ def bootstrap(spark: SparkSession, cat: Catalog, cfg: EngineConfig) -> int:
     return sid
 
 
-def _discard_handoff(handoff: dict | None) -> None:
-    """Release a pending next-wave admission handoff that will not be
-    adopted (config drift, wrong wave, aborted crawl): wait out its
-    in-flight job, then unpersist everything it cached."""
-    if not handoff:
-        return
-    try:
-        handoff["future"].result()
-    except Exception:
-        pass  # a failed speculative job has nothing to release beyond persists
-    for df in handoff["persists"]:
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-
-
-def run_wave(spark: SparkSession, cat: Catalog, cfg: EngineConfig,
-             handoff_slot: list | None = None, spec_pool=None) -> dict:
+def run_wave(spark: SparkSession, cat: Catalog, cfg: EngineConfig) -> dict:
     """One crawl wave = one batch job + one snapshot commit.
 
     Per-wave cost is bounded by the ADMITTED + DISCOVERED sets, not the
@@ -301,7 +268,7 @@ def run_wave(spark: SparkSession, cat: Catalog, cfg: EngineConfig,
     wave_pools: list = []
     try:
         return _run_wave(spark, cat, cfg, wave_persists, wave_broadcasts,
-                         wave_pools, handoff_slot, spec_pool)
+                         wave_pools)
     finally:
         # always runs — an exception mid-wave must not leak this wave's
         # early-write threads (they finish into the never-committed
@@ -317,22 +284,27 @@ def run_wave(spark: SparkSession, cat: Catalog, cfg: EngineConfig,
 
 def _run_wave(spark: SparkSession, cat: Catalog, cfg: EngineConfig,
               wave_persists: list, wave_broadcasts: list,
-              wave_pools: list, handoff_slot: list | None = None,
-              spec_pool=None) -> dict:
+              wave_pools: list) -> dict:
     t0 = time.monotonic()
     snap = cat.load_snapshot()
-    assert snap is not None, "bootstrap first"
-    assert snap.state["config_hash"] == cfg.config_hash(), "config drift"
+    # exceptions, not asserts: these guards must survive python -O
+    if snap is None:
+        raise ValueError(f"catalog at {cat.root} has no snapshot; "
+                         "bootstrap it (or use run_crawl) first")
+    if snap.state.get("config_hash") != cfg.config_hash():
+        raise ValueError(
+            f"wave config mismatch at {cat.root}: snapshot has config_hash="
+            f"{snap.state.get('config_hash')!r}, requested {cfg.config_hash()!r}")
     wave = snap.wave + 1
     base = int(snap.state["global_seq"])
     nb = cfg.n_buckets
     par = spark.sparkContext.defaultParallelism
 
     def parts_for(n: int, floor_parts: int | None = None) -> int:
-        # floor at the cluster parallelism: a 3.6M-row write at the old
-        # rows-per-file-only sizing was 4 tasks on 32 cores (measured —
-        # the whole writes phase scaled 8->32 at 1.09x); the floor costs
-        # nothing at 10^10 scale where rows/size dominates anyway
+        # floor at the cluster parallelism: rows-per-file sizing alone
+        # makes a 3.6M-row write 4 tasks on 32 cores, so the writes
+        # phase would not scale with cores; the floor costs nothing at
+        # 10^10 scale where rows/size dominates anyway
         if floor_parts is None:
             floor_parts = par
         return max(floor_parts, min(1024, n // cfg.write_rows_per_file + 1))
@@ -356,57 +328,30 @@ def _run_wave(spark: SparkSession, cat: Catalog, cfg: EngineConfig,
     tick = [time.monotonic()]
 
     # ---- Q1/O1: pruned admission + crawl order ----------------------------
-    # If the PREVIOUS wave launched this wave's admission speculatively
-    # (over the staged frontier + just-written hosts files — the exact
-    # data the commit then pinned), adopt its materialized result; its
-    # ranking job overlapped the previous wave's bloom/lineage writes
-    # instead of serializing after the commit.  Adoption is guarded by
-    # (wave, global_seq base, config hash): any mismatch — resume from a
-    # different snapshot, config drift, aborted commit — discards the
-    # speculation and runs admission normally.  Inputs were identical
-    # files, so adopted == fresh bit-for-bit.
-    admitted = None
-    incoming = handoff_slot[0] if handoff_slot else None
-    if incoming is not None:
-        if (incoming["wave"] == wave and incoming["base"] == base
-                and incoming["config_hash"] == cfg.config_hash()):
-            handoff_slot[0] = None
-            try:
-                admitted, n_admitted, touched_files, adm_host_segs = (
-                    incoming["future"].result())
-                wave_persists.extend(incoming["persists"])
-                timings["admit_overlapped"] = 1.0
-            except Exception:
-                _discard_handoff(incoming)
-                admitted = None
-        else:
-            handoff_slot[0] = None
-            _discard_handoff(incoming)
-    if admitted is None:
-        # persist the ranked-admitted set (small: <= Σ budgets) BEFORE
-        # the global-seq assembly — its prefix-sum offsets are a
-        # broadcast subquery over the same rows, which would otherwise
-        # re-run the ranking window a second time inside the one action
-        ranked_admitted = admission.admit_pruned(
-            spark, cat, hosts, schemas.FRONTIER,
-            head_factor=cfg.admission_head_factor,
-            persists=wave_persists,
-            want=snap.state.get("next_admission_want")).persist()
-        wave_persists.append(ranked_admitted)
-        admitted = admission.assign_global_seq(ranked_admitted, base).persist()
-        wave_persists.append(admitted)
-        # ONE driver action for every per-wave scalar: row count + the
-        # exact set of frontier data files that lost a row (bounded by
-        # the head file count; admission tags each row with
-        # input_file_name) + the host_hash segments of the admitted
-        # hosts (for the hosts carry-forward split below) — every extra
-        # action is a cluster-wide barrier
-        n_admitted, touched_files, adm_host_segs = admitted.agg(
-            F.count("*"), F.collect_set("_src_file"),
-            F.collect_set(F.shiftright(
-                murmur64_col(F.col("host")), BACKSTOP_SEG_SHIFT))
-        ).collect()[0]
-        touched_files = set(touched_files or [])
+    # persist the ranked-admitted set (small: <= Σ budgets) BEFORE the
+    # global-seq assembly — its prefix-sum offsets are a broadcast
+    # subquery over the same rows, which would otherwise re-run the
+    # ranking window a second time inside the one action
+    ranked_admitted = admission.admit_pruned(
+        spark, cat, hosts, schemas.FRONTIER,
+        head_factor=cfg.admission_head_factor,
+        persists=wave_persists,
+        want=snap.state.get("next_admission_want")).persist()
+    wave_persists.append(ranked_admitted)
+    admitted = admission.assign_global_seq(ranked_admitted, base).persist()
+    wave_persists.append(admitted)
+    # ONE driver action for every per-wave scalar: row count + the exact
+    # set of frontier data files that lost a row (bounded by the head
+    # file count; admission tags each row with input_file_name) + the
+    # host_hash segments of the admitted hosts (for the hosts
+    # carry-forward split below) — every extra action is a cluster-wide
+    # barrier
+    n_admitted, touched_files, adm_host_segs = admitted.agg(
+        F.count("*"), F.collect_set("_src_file"),
+        F.collect_set(F.shiftright(
+            murmur64_col(F.col("host")), BACKSTOP_SEG_SHIFT))
+    ).collect()[0]
+    touched_files = set(touched_files or [])
     adm_host_segs = set(adm_host_segs or [])
     _mark("admit", tick)
 
@@ -486,7 +431,7 @@ def _run_wave(spark: SparkSession, cat: Catalog, cfg: EngineConfig,
         # hash-clustered append: each seen file covers a narrow url_hash
         # range, so later waves' collision backstops prune to the files
         # their maybe-keys hash into instead of streaming every key ever
-        # admitted (the last O(discovered) per-wave term — VERDICT r4 #1)
+        # admitted (which would make the backstop O(discovered) per wave)
         "seen": early_pool.submit(
             cat.stage_write,
             _with_hseg(seen_new, parts_for(n_admitted)).repartition(
@@ -516,11 +461,11 @@ def _run_wave(spark: SparkSession, cat: Catalog, cfg: EngineConfig,
     # outlink log included — and the expansion re-reads only the slim
     # outlink columns from the just-written parquet (columnar pruning
     # never touches the bytes column).
-    # P0b, adaptive (VERDICT r3 task #6): the salt fan-out per host is
-    # derived from that host's MEASURED admitted count, not a fixed
-    # knob.  target_rows = an eighth of an even partition share, so even
-    # when two heavy (host, salt) keys hash into one partition the
-    # fetch stays balanced; s(h) = clamp(ceil(n_h / target_rows),
+    # P0b, adaptive: the salt fan-out per host is derived from that
+    # host's MEASURED admitted count, not a fixed knob.  target_rows =
+    # an eighth of an even partition share, so even when two heavy
+    # (host, salt) keys hash into one partition the fetch stays
+    # balanced; s(h) = clamp(ceil(n_h / target_rows),
     # salt_factor, salt_factor_max).  The floor keeps uniform waves'
     # key space dense (hash balance); the cap bounds a 10^10-scale
     # mega-host's key count.  The per-host counts aggregate the already-
@@ -597,10 +542,9 @@ def _run_wave(spark: SparkSession, cat: Catalog, cfg: EngineConfig,
     # persist the probed set: BOTH branches below (fresh + maybe) and
     # the backstop broadcasts read it, and without the cache the D1
     # window + probe UDF would re-run once per consumer.
-    filt = _seen_filter(cfg)
     nbits_cur = int(snap.state.get("bloom_nbits", cfg.bloom_nbits))
-    probed = filt.probe(uniq, shards, cfg, broadcasts=wave_broadcasts,
-                        nbits=nbits_cur).persist()
+    probed = bloom.probe(uniq, shards, cfg, broadcasts=wave_broadcasts,
+                         nbits=nbits_cur).persist()
     wave_persists.append(probed)
     fresh = probed.filter(~F.col("maybe_seen")).drop("maybe_seen")
     maybe = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
@@ -742,38 +686,36 @@ def _run_wave(spark: SparkSession, cat: Catalog, cfg: EngineConfig,
         new_read = spark.createDataFrame([], schemas.FRONTIER)
 
     # ---- B1: new discoveries enter the bloom ------------------------------
-    # self-sizing (round 4): a fixed bitmap saturates as the crawl
-    # discovers — the r3 bench filled 8.4M bits with 3.4M keys x k=5 by
-    # wave 3 (fill 0.87, FPR ~0.5), silently dumping ~1.8M "maybe" rows
-    # into the full frontier+seen shuffle backstop every later wave.
-    # The discovered count is exact and free: frontier ∪ seen partitions
-    # the discovered set, so parent row_counts + this wave's unique
-    # candidates bound it.  When the projected fill crosses the
-    # backend's load target (bloom.FILL_TARGET / cuckoo.LOAD_TARGET),
-    # rebuild at the next power of two from the key
-    # column of frontier ∪ seen ∪ new (one slim columnar pass, amortized
-    # O(discovered) per doubling — the classic growth argument).
+    # The bitmap sizes itself: a fixed bitmap saturates as the crawl
+    # discovers, its FPR climbs toward 1, and every "maybe" row then
+    # lands in the exact frontier+seen backstop.  The discovered count
+    # is exact and free: frontier ∪ seen partitions the discovered set,
+    # so parent row_counts + this wave's unique candidates bound it.
+    # When the projected fill crosses bloom.FILL_TARGET, rebuild at the
+    # next power of two from the key column of frontier ∪ seen ∪ new
+    # (one slim columnar pass, amortized O(discovered) per doubling —
+    # the classic growth argument).
     prev_keys = int(snap.row_counts.get("frontier", 0)) + int(
         snap.row_counts.get("seen", 0))
-    if filt.sized_nbits(prev_keys + n_uniq, cfg, nbits_cur) > nbits_cur:
+    if bloom.sized_nbits(prev_keys + n_uniq, cfg, nbits_cur) > nbits_cur:
         # rebuild with 4x headroom so growth costs one rebuild every ~2
         # doublings of the discovered set, not one per wave
-        nbits_next = filt.sized_nbits(
+        nbits_next = bloom.sized_nbits(
             (prev_keys + n_uniq) * 4, cfg, nbits_cur)
         all_keys = (
             seen_updated.select("url_hash")
             .unionByName(frontier_full.select("url_hash"))
             .unionByName(new_read.select("url_hash"))
         )
-        shards_updated = filt.build_shards(
+        shards_updated = bloom.build_shards(
             all_keys, spark.createDataFrame([], schemas.BLOOM_SHARDS),
             cfg, nbits=nbits_next)
     else:
         nbits_next = nbits_cur
-        shards_updated = filt.build_shards(
+        shards_updated = bloom.build_shards(
             new_read, shards, cfg, nbits=nbits_cur)
 
-    # ---- hosts: carry-forward split (VERDICT r4 #2) ------------------------
+    # ---- hosts: carry-forward split ---------------------------------------
     # Only hosts whose state CHANGED this wave need a rewrite: admitted
     # hosts (tokens consumed, backlog drained) and hosts gaining backlog
     # (credited below) — both seg sets were collected for free above.
@@ -781,7 +723,7 @@ def _run_wave(spark: SparkSession, cat: Catalog, cfg: EngineConfig,
     # the lazy carry invariant (schemas.HOSTS + effective_tokens)
     # reconstructs bit-exactly at read time — so their files carry
     # byte-untouched in the manifest, the same trick the frontier uses.
-    # A throttled wave late in a big crawl now writes O(touched hosts),
+    # A throttled wave late in a big crawl writes O(touched hosts),
     # not O(hosts).  Every cfg.hosts_compact_every waves the split is
     # bypassed (full rewrite): bounds the refill fold depth and re-arms
     # the exact next-want Observation.
@@ -899,94 +841,26 @@ def _run_wave(spark: SparkSession, cat: Catalog, cfg: EngineConfig,
             ).repartition(hosts_parts, "_hseg"),
             "stage-append", ["_hseg"]))
 
-    def next_want_value() -> int | None:
-        """Exact Σ next-wave need, but only on full-rewrite waves (with
-        carried hosts files the Observation covers only the rewritten
-        rows); None ⇒ the next admission computes it itself (one small
-        hosts aggregate).  The guard order matters twice over: reading
-        a never-fired Observation blocks forever, and this single
-        definition serves BOTH the speculative admission and the commit
-        state — a divergence between those two would let an adopted
-        speculation rank with a different want than a fresh one."""
-        return (int(want_obs.get["next_want"] or 0)
-                if hosts_write_needed and not hosts_carried else None)
-
     with ThreadPoolExecutor(max_workers=len(writes)) as pool:
-        futs = {
-            name: pool.submit(
+        futs = [
+            pool.submit(
                 timed(name, cat.stage_write, df, name, mode, None, pcols))
             for name, df, mode, pcols in writes
-        }
-        if spec_pool is not None and handoff_slot is not None:
-            # ---- overlapped NEXT-wave admission (exact, not a guess) --
-            # The next wave's admission inputs are already final here:
-            # the frontier staged list (carried + rewritten + new files,
-            # all on disk) and the hosts pin = the carried entries (an
-            # immutable local list) + whatever futs["hosts"] writes —
-            # exactly the files the imminent commit pins.  Rank them on
-            # a driver thread NOW so the admission job overlaps the
-            # bloom/lineage writes (and whatever else trails) instead of
-            # serializing after the commit.  The commit does NOT wait
-            # for this future; the next run_wave adopts it (or discards
-            # it on any mismatch).
-            staged_frontier = cat.staged_entries("frontier")
-            next_base = base + n_admitted
-            spec_persists: list = []
-
-            def spec_admission():
-                # stage_write RETURNS the new manifest entries — the
-                # hosts pin is hosts_carried + that return.  Never
-                # re-read cat staged state from this thread: the main
-                # thread's commit() clears the staged map without
-                # waiting for this future, and losing that race would
-                # rank an EMPTY hosts relation (0 admitted next wave)
-                # while the adoption guard (wave/base/config_hash) still
-                # matches — a silent oracle divergence (ADVICE r4,
-                # high).  staged_frontier is likewise snapshotted on the
-                # main thread above.
-                hosts_fut = futs.get("hosts")
-                hosts_entries = hosts_carried + (
-                    hosts_fut.result() if hosts_fut is not None else [])
-                # (see next_want_value: safe here because the hosts
-                # future, whose write fires the Observation, has just
-                # resolved — or the guard short-circuits to None)
-                want_next = next_want_value()
-                hosts_next_read = admission.effective_tokens(
-                    cat.scan_entries(spark, hosts_entries, schemas.HOSTS),
-                    wave)
-                ranked = admission.admit_pruned(
-                    spark, cat, hosts_next_read, schemas.FRONTIER,
-                    head_factor=cfg.admission_head_factor,
-                    persists=spec_persists, want=want_next,
-                    entries=staged_frontier).persist()
-                spec_persists.append(ranked)
-                adm = admission.assign_global_seq(
-                    ranked, next_base).persist()
-                spec_persists.append(adm)
-                n_adm, touched, hsegs = adm.agg(
-                    F.count("*"), F.collect_set("_src_file"),
-                    F.collect_set(F.shiftright(
-                        murmur64_col(F.col("host")), BACKSTOP_SEG_SHIFT))
-                ).collect()[0]
-                return adm, int(n_adm), set(touched or []), set(hsegs or [])
-
-            handoff_slot[0] = {
-                "wave": wave + 1,
-                "base": next_base,
-                "config_hash": cfg.config_hash(),
-                "future": spec_pool.submit(spec_admission),
-                "persists": spec_persists,
-            }
-        for name, fut in futs.items():
-            fut.result()
-        for name, fut in early_futs.items():
+        ]
+        for fut in [*futs, *early_futs.values()]:
             fut.result()
     early_pool.shutdown(wait=True)
     _mark("writes", tick)
     # reading a never-fired Observation would block forever — the quiet
     # wave skipped the write, so its count is definitionally 0
     n_new = int(new_obs.get["n"] or 0) if n_new_bound > 0 else 0
-    next_want = next_want_value()
+    # exact Σ next-wave need, but only on full-rewrite waves (with
+    # carried hosts files the Observation covers only the rewritten
+    # rows); None ⇒ the next admission computes it itself (one small
+    # hosts aggregate).  The guard also keeps a never-fired Observation
+    # from being read, which would block forever.
+    next_want = (int(want_obs.get["next_want"] or 0)
+                 if hosts_write_needed and not hosts_carried else None)
     wall = time.monotonic() - t0
     metrics = {
         "wave": wave, "admitted": n_admitted, "new_frontier": n_new,
@@ -1045,28 +919,14 @@ def run_crawl(spark: SparkSession, root: str, cfg: EngineConfig) -> Catalog:
             f"{cfg.config_hash()!r}; start a fresh catalog root or rerun "
             "with the original EngineConfig"
         )
-    from concurrent.futures import ThreadPoolExecutor
-
-    # One driver thread carries the overlapped next-wave admission
-    # across wave boundaries (see _run_wave); the slot owns any pending
-    # handoff so an abort anywhere still releases its cached relations.
-    handoff_slot: list = [None]
-    spec_pool = ThreadPoolExecutor(max_workers=1)
     try:
         while snap.wave < cfg.n_waves:
-            run_wave(
-                spark, cat, cfg, handoff_slot=handoff_slot,
-                # no point speculating past the final wave
-                spec_pool=spec_pool if snap.wave + 1 < cfg.n_waves else None)
+            run_wave(spark, cat, cfg)
             snap = cat.load_snapshot()
             # periodic seen compaction (plans/maintenance.py): appends
             # fragment each hash segment across ~W files after W waves;
             # compaction restores one-file-per-segment pruning in one
-            # content-preserving atomic snapshot.  Touches neither the
-            # frontier nor hosts, so a pending speculative admission
-            # (staged-file snapshots taken before this) adopts
-            # unaffected — its guard checks wave/global_seq/config,
-            # all unchanged by a maintenance commit.
+            # content-preserving atomic snapshot.
             if (cfg.seen_compact_every > 0 and snap.wave > 0
                     and snap.wave % cfg.seen_compact_every == 0
                     and snap.wave < cfg.n_waves):
@@ -1082,8 +942,4 @@ def run_crawl(spark: SparkSession, root: str, cfg: EngineConfig) -> Catalog:
         # orphans for sweep_orphans
         cat.discard_staged()
         raise
-    finally:
-        _discard_handoff(handoff_slot[0])
-        handoff_slot[0] = None
-        spec_pool.shutdown(wait=True)
     return cat

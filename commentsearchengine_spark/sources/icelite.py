@@ -25,11 +25,6 @@ scratch:
   Iceberg snapshot checkpoints ... per-partition lineage + metrics").
 - **Manifest stats**: per-file row counts feed lineage totals and let
   scans skip empty tables without touching Parquet footers.
-
-Swap-in path: if a real ``iceberg-spark-runtime`` jar appears, an
-adapter with the same five methods (``scan/append/overwrite/commit/
-resume``) maps onto ``spark.table`` / ``writeTo().append()`` /
-``VERSION AS OF`` — nothing above this interface changes.
 """
 
 from __future__ import annotations
@@ -328,20 +323,6 @@ class Catalog:
             for e in entries
         ]
 
-    def staged_entries(self, table: str) -> list[dict]:
-        """Snapshot of the staged (not-yet-committed) manifest entries
-        for ``table`` — the file list the NEXT snapshot will pin.  Lets
-        a caller plan work against the upcoming snapshot's exact data
-        files (e.g. the wave loop's overlapped next-wave admission)
-        while other tables are still being written; the returned list
-        is a copy, immune to later staging or the commit's reset."""
-        with self._lock:
-            entries = list(self._staged.get(table, []))
-        return [
-            e if isinstance(e, dict) else {"path": e, "rows": None, "stats": {}}
-            for e in entries
-        ]
-
     # ----------------------------------------------------------- writes
     def stage_entries(self, table: str, entries: list[Any]) -> None:
         """Seed the NEXT snapshot's file list for ``table`` with existing
@@ -504,8 +485,10 @@ class Catalog:
         in-flight stage_write that has written parquet but not yet
         registered its entries is never swept (same rationale as
         Iceberg's ``older_than``); pass 0 only when no writer can be
-        active.  Also removes write directories left with no parquet
-        (e.g. Spark ``_SUCCESS`` markers)."""
+        active.  Also removes Spark's sidecars of dead files (``_SUCCESS``
+        markers, and the dot-prefixed ``.<file>.crc`` checksums of data
+        files no snapshot references) and the directories they leave
+        empty."""
         live: set[str] = set()
         for sid in self.snapshots():
             snap = self.load_snapshot(sid)
@@ -531,7 +514,15 @@ class Catalog:
                     continue
                 if st.st_mtime > cutoff:
                     continue
-                if name.endswith(".parquet") or name.startswith("_"):
+                if name.startswith(".") and name.endswith(".crc"):
+                    # the local writer's checksum sidecar of `name[1:-4]`:
+                    # dead exactly when the file it covers is
+                    removable = os.path.normpath(os.path.join(
+                        os.path.dirname(rel), name[1:-4])) not in live
+                else:
+                    removable = (name.endswith(".parquet")
+                                 or name.startswith("_"))
+                if removable:
                     os.remove(full)
                     removed_files += 1
                     removed_bytes += st.st_size

@@ -95,66 +95,32 @@ def test_time_travel(spark):
         shutil.rmtree(root, ignore_errors=True)
 
 
-def test_stale_or_failing_handoff_falls_back(spark):
-    """The overlapped-admission guard: a handoff for the wrong wave, a
-    wrong global_seq base, or one whose speculative job FAILED must be
-    discarded (its cached relations released) with admission falling
-    back to the normal path — crawl output identical either way."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from commentsearchengine_spark.plans import wave as W
-
-    cfg = EngineConfig(n_seeds=8, n_waves=2, n_buckets=16)
-    clean_root = tempfile.mkdtemp(prefix="handoff-clean-")
-    poisoned_root = tempfile.mkdtemp(prefix="handoff-poisoned-")
-    pool = ThreadPoolExecutor(max_workers=1)
-    try:
-        cat_clean = run_crawl(spark, clean_root, cfg)
-
-        cat = Catalog(poisoned_root)
-        W.bootstrap(spark, cat.init(), cfg)
-        released: list = []
-
-        class FakeDF:
-            def unpersist(self):
-                released.append(True)
-
-        def boom():
-            raise RuntimeError("speculative job died")
-
-        stale = {"wave": 999, "base": 0, "config_hash": cfg.config_hash(),
-                 "future": pool.submit(lambda: None),
-                 "persists": [FakeDF()]}
-        failing = {"wave": 1, "base": 0, "config_hash": cfg.config_hash(),
-                   "future": pool.submit(boom), "persists": [FakeDF()]}
-        W.run_wave(spark, cat, cfg, handoff_slot=[stale])
-        W.run_wave(spark, cat, cfg, handoff_slot=[failing])
-        assert len(released) == 2  # both handoffs fully released
-        assert _tables(spark, cat) == _tables(spark, cat_clean)
-    finally:
-        pool.shutdown(wait=True)
-        shutil.rmtree(clean_root, ignore_errors=True)
-        shutil.rmtree(poisoned_root, ignore_errors=True)
-
-
 def test_resume_refuses_wrong_layout_or_config(spark):
     """Resuming a catalog written under an older on-disk layout (e.g. a
     bloom probed at the wrong bitmap size) or with drifted
     semantics-affecting config must fail loud, never silently corrupt
-    dedup (op K2 guards)."""
+    dedup (op K2 guards).  run_wave's own entry guards raise too, so
+    they hold under python -O."""
     import json
     import os
 
     import pytest
 
+    from commentsearchengine_spark.plans.wave import run_wave
+
     cfg = EngineConfig(n_seeds=4, n_waves=1, n_buckets=8)
+    drifted = EngineConfig(n_seeds=4, n_waves=2, n_buckets=8, bloom_k=7)
     root = tempfile.mkdtemp(prefix="layout-guard-")
+    empty_root = tempfile.mkdtemp(prefix="layout-guard-empty-")
     try:
+        with pytest.raises(ValueError, match="no snapshot"):
+            run_wave(spark, Catalog(empty_root).init(), cfg)
         cat = run_crawl(spark, root, cfg)
         with pytest.raises(ValueError, match="config_hash"):
-            run_crawl(spark, root,
-                      EngineConfig(n_seeds=4, n_waves=2, n_buckets=8,
-                                   bloom_k=7))
+            run_crawl(spark, root, drifted)
+        with pytest.raises(ValueError, match="config_hash"):
+            run_wave(spark, cat, drifted)
+        assert cat.load_snapshot().wave == 1  # nothing committed
         # doctor the current snapshot to an older layout version
         snap_path = os.path.join(
             root, "metadata",
@@ -169,3 +135,4 @@ def test_resume_refuses_wrong_layout_or_config(spark):
                       EngineConfig(n_seeds=4, n_waves=2, n_buckets=8))
     finally:
         shutil.rmtree(root, ignore_errors=True)
+        shutil.rmtree(empty_root, ignore_errors=True)

@@ -1,6 +1,7 @@
 """Compaction maintenance (plans/maintenance.py): content-preserving,
 pruning-restoring, and transparent to a resumed crawl."""
 
+import os
 import shutil
 import tempfile
 
@@ -164,6 +165,20 @@ def test_expire_and_sweep_reclaim_compaction_orphans(spark):
         assert swept["removed_files"] > 0 and swept["removed_bytes"] > 0
         # second sweep is a no-op (idempotent)
         assert cat.sweep_orphans(grace_seconds=0)["removed_files"] == 0
+        # no emptied write directory survives: Spark's dot-prefixed .crc
+        # sidecars of swept files go with them, so every directory left
+        # under data/ still holds a live data file
+        live = {os.path.normpath(e["path"])
+                for sid in cat.snapshots()
+                for ents in cat.load_snapshot(sid).tables.values()
+                for e in ents}
+        data_dir = os.path.join(root, "data")
+        for cur, _dirs, _names in os.walk(data_dir):
+            if cur == data_dir:
+                continue
+            assert any(
+                os.path.relpath(os.path.join(d, n), root) in live
+                for d, _, ns in os.walk(cur) for n in ns), cur
 
         # content intact through reclamation...
         assert _seen_rows(spark, cat) == rows_before
@@ -201,33 +216,3 @@ def test_staging_guards(spark):
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
-
-def test_auto_compaction_with_cuckoo_backend_keeps_parity(spark, monkeypatch):
-    """Cross-feature integration: per-wave seen compaction UNDER the
-    cuckoo seen-filter backend still matches the oracle bit-for-bit —
-    compaction rewrites only the seen table (the filter shards table is
-    untouched) and the probe/backstop chain must be indifferent to both
-    the backend and the seen file layout at once."""
-    import commentsearchengine_spark.plans.maintenance as m
-
-    real = m.compact_table
-    calls: list[dict] = []
-
-    def forcing(spark_, cat_, table, ddl, **kw):
-        kw["min_files"] = 2
-        out = real(spark_, cat_, table, ddl, **kw)
-        calls.append(out)
-        return out
-
-    monkeypatch.setattr(m, "compact_table", forcing)
-    cfg = EngineConfig(n_seeds=25, n_waves=3, n_buckets=32,
-                       seen_compact_every=1, seen_filter="cuckoo")
-    root = tempfile.mkdtemp(prefix="icelite-autocompact-cuckoo-")
-    try:
-        cat = run_crawl(spark, root, cfg)
-        assert any(c["compacted"] for c in calls)
-        o = run_oracle(25, 3, 32, cfg.n_hosts)
-        from tests.test_crawl_match import _assert_match
-        _assert_match(spark, cat, o)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
