@@ -2,7 +2,7 @@
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field, asdict
+from dataclasses import dataclass, asdict
 import hashlib
 import json
 
@@ -43,42 +43,27 @@ class EngineConfig:
     # salted repartition (tools/skew_drive.py verifies exact parity).
     salt_factor: int = 32
     salt_factor_max: int = 1024
-    # Arrow batch sizing: image rows are fat (SURVEY §4), but batches
-    # that are too small multiply JVM<->Python round-trips — measured
-    # 2x wave wall-time at 512 rows vs 4096 on 32 cores.  4096 rows
-    # x ~5 KB/page ~= 20 MB per in-flight batch per worker.
+    # Arrow batch rows for the fetch's output (operators/fetch.py): image
+    # rows are fat (SURVEY §4), but batches that are too small multiply
+    # JVM<->Python round-trips — measured 2x wave wall-time at 512 rows
+    # vs 4096 on 32 cores.  4096 rows x ~5 KB/page ~= 20 MB per
+    # in-flight batch per worker (plan-only knob)
     arrow_batch_rows: int = 4096
-    # ...whereas the SLIM-row Python stages (bloom probe/build over
-    # ~50-byte URL rows, bootstrap canonicalization) want far larger
-    # batches: the wave loop flips the session setting per job phase.
-    # Measured: the 5M-candidate probe+agg step 5.5 -> 4.9 s at 32
-    # cores going 4096 -> 65536 rows/batch (plan-only knob)
-    arrow_batch_rows_slim: int = 65536
     # bench knobs (affect semantics => part of config_hash; parity tests
     # exercise them at small scale)
     seed_spread_hosts: int = 0   # 0 = all seeds on the WaPo host
     budget_scale: float = 1.0    # multiplies politeness capacity/refill
     # ---- plan-level knobs (never change results => NOT in config_hash)
-    # admission pass-1 reads head-tier frontier files covering this
-    # multiple of the wave's total budget (operators/admission.py)
-    admission_head_factor: int = 4
-    # row-proportional write partitioning: target rows per parquet file
-    # for the per-wave table writes (plans/wave.py).  Small enough that
-    # a multi-million-row frontier/seen write parallelizes instead of
-    # serializing into one task; large enough to keep file counts sane
-    # at 10^8-row waves (the 1024-part cap bounds the manifest).
-    write_rows_per_file: int = 1_000_000
     # bloom "maybe" sets up to this many rows verify via broadcast
     # collision joins (stream the big tables, zero shuffle); larger sets
     # fall back to plain shuffle anti-joins (plans/wave.py)
     backstop_broadcast_max_rows: int = 500_000
     # hosts carry-forward (plans/wave.py): every this-many waves the
     # hosts table rewrites wholesale, normalizing every lazily-carried
-    # row to the current wave — bounds the effective_tokens fold depth
-    # and re-arms the exact next-want Observation.  Plan-only: hosts
-    # row STALENESS changes, but effective balances (and every parity
-    # table: crawl_log/seen/frontier/lineage/pages) are bit-identical
-    # at any cadence.
+    # row to the current wave — bounds the effective_tokens fold depth.
+    # Plan-only: hosts row STALENESS changes, but effective balances
+    # (and every parity table: crawl_log/seen/frontier/lineage/pages)
+    # are bit-identical at any cadence.
     hosts_compact_every: int = 16
     # auto-compaction cadence for the seen table (plans/maintenance.py
     # run by the crawl loop between waves; 0 = offline-only): appends
@@ -88,9 +73,8 @@ class EngineConfig:
     # (tests/test_maintenance.py proves oracle parity through it).
     seen_compact_every: int = 64
 
-    _PLAN_ONLY = ("n_waves", "admission_head_factor", "write_rows_per_file",
-                  "backstop_broadcast_max_rows", "salt_factor",
-                  "salt_factor_max", "bloom_nbits", "arrow_batch_rows_slim",
+    _PLAN_ONLY = ("n_waves", "backstop_broadcast_max_rows", "salt_factor",
+                  "salt_factor_max", "bloom_nbits", "arrow_batch_rows",
                   "hosts_compact_every", "seen_compact_every")
 
     def config_hash(self) -> str:

@@ -88,7 +88,10 @@ def png_encode(arr: np.ndarray) -> bytes:
 
 
 def png_decode(data: bytes) -> np.ndarray:
-    assert data[:8] == _PNG_SIG, "not a PNG"
+    # exceptions, not asserts: under python -O an assert vanishes and the
+    # decoder would return garbage pixels
+    if data[:8] != _PNG_SIG:
+        raise ValueError("not a PNG")
     pos, w = 8, 0
     h = 0
     idat = b""
@@ -98,14 +101,16 @@ def png_decode(data: bytes) -> np.ndarray:
         body = data[pos + 8 : pos + 8 + length]
         if tag == b"IHDR":
             w, h, bits, ctype = struct.unpack(">IIBB", body[:10])
-            assert bits == 8 and ctype == 2, "only 8-bit RGB supported"
+            if bits != 8 or ctype != 2:
+                raise ValueError("only 8-bit RGB PNG is supported")
         elif tag == b"IDAT":
             idat += body
         elif tag == b"IEND":
             break
         pos += 12 + length
     raw = np.frombuffer(zlib.decompress(idat), dtype=np.uint8).reshape(h, w * 3 + 1)
-    assert (raw[:, 0] == 0).all(), "only filter 0 supported"
+    if (raw[:, 0] != 0).any():
+        raise ValueError("only PNG filter type 0 is supported")
     return raw[:, 1:].reshape(h, w, 3).copy()
 
 

@@ -15,9 +15,13 @@ offsets broadcast-join back — global_seq = base + offset(host) + rank.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, Observation, Window, functions as F
 
 ORDER_COLS = ["priority", "disc_wave", "disc_seq", "canon_url"]
+
+# admit_pruned's pass 1 reads head-tier frontier files covering this
+# multiple of the wave's total admission need
+HEAD_FACTOR = 4
 
 
 def admit(frontier: DataFrame, hosts: DataFrame) -> DataFrame:
@@ -61,9 +65,8 @@ def choose_cut(entries: list[dict], want_rows: int) -> int | None:
 
 
 def admit_pruned(spark, cat, hosts: DataFrame, schema_ddl: str,
-                 head_factor: int = 4,
+                 head_factor: int = HEAD_FACTOR,
                  persists: list | None = None,
-                 want: int | None = None,
                  timings: dict | None = None) -> DataFrame:
     """Q1 with manifest pruning: rank only the frontier's plausible head
     of the CURRENT committed snapshot.
@@ -100,56 +103,51 @@ def admit_pruned(spark, cat, hosts: DataFrame, schema_ddl: str,
         if timings is not None:
             timings[name] = round(_time.monotonic() - t0, 3)
 
-    if want is None:
-        # callers that carry Σ need in snapshot state (plans/wave.py
-        # observes it during the previous wave's hosts write — zero
-        # extra jobs) pass it in; otherwise one small aggregate job
-        t0 = _time.monotonic()
-        want = budgets.agg(
-            F.coalesce(F.sum("need"), F.lit(0)).cast("long")
-        ).collect()[0][0]
-        _mark("want_job_sec", t0)
+    # Σ need rides the ONE job that materializes the budgets cache: a
+    # plan without an exchange runs as a single job, where a global
+    # aggregate would add a shuffle-map job and a result job
+    t0 = _time.monotonic()
+    obs = Observation()
+    budgets.observe(obs, F.sum("need").alias("want")) \
+        .write.format("noop").mode("overwrite").save()
+    want = obs.get["want"] or 0
+    _mark("want_job_sec", t0)
     from ..sources.icelite import _may_match
 
     entries = cat.table_files("frontier")
     cut = choose_cut(entries, int(want) * head_factor)
+    head_entries = entries if cut is None else [
+        e for e in entries if _may_match(e, [("priority", "<=", cut)])]
     if timings is not None:
         timings["cut"] = cut
-        timings["head_files"] = (
-            len(entries) if cut is None else len(
-                [e for e in entries
-                 if _may_match(e, [("priority", "<=", cut)])]))
+        timings["head_files"] = len(head_entries)
         timings["total_files"] = len(entries)
-    w = Window.partitionBy("host").orderBy(*[F.col(c) for c in ORDER_COLS])
-
-    if cut is not None and len(
-        [e for e in entries if _may_match(e, [("priority", "<=", cut)])]
-    ) == len(entries):
+    if len(head_entries) == len(entries):
         # the cut excludes nothing (budgets reach deep into every tier,
         # or the frontier is shallow): the coverage-check machinery
         # would only add jobs — rank the whole table once instead
         cut = None
+    w = Window.partitionBy("host").orderBy(*[F.col(c) for c in ORDER_COLS])
+
     # every admitted row remembers its source data file so the caller's
     # carry-forward commit can rewrite EXACTLY the files that lost rows
     # (file-precise, not a conservative priority bound)
-    def tagged_scan(where: list | None = None):
-        sel = entries if where is None else [
-            e for e in entries if _may_match(e, where)]
+    def tagged_scan(sel: list[dict]) -> DataFrame:
         return cat.scan_entries(spark, sel, schema_ddl) \
             .withColumn("_src_file", F.input_file_name())
 
-    if cut is None:
-        frontier = tagged_scan()
+    def rank_and_admit(rows: DataFrame) -> DataFrame:
         return (
-            frontier.join(F.broadcast(budgets), "host")
+            rows.join(F.broadcast(budgets), "host")
             .withColumn("rank_in_host", F.row_number().over(w))
             .filter(F.col("rank_in_host") <= F.col("budget"))
             .drop("budget", "need")
         )
 
-    head = tagged_scan(
-        where=[("priority", "<=", cut)],
-    ).filter(F.col("priority") <= cut)
+    if cut is None:
+        return rank_and_admit(tagged_scan(entries))
+
+    head = tagged_scan(head_entries).filter(F.col("priority") <= cut)
     # coverage check FIRST, via a partial-aggregated count (map-side
     # combine, no wide row shuffle, no window) — the expensive per-host
     # ranking then runs exactly ONCE, over whichever row set the check
@@ -171,20 +169,12 @@ def admit_pruned(spark, cat, hosts: DataFrame, schema_ddl: str,
     if timings is not None:
         timings["n_short"] = n_short
 
-    def rank_and_admit(rows: DataFrame) -> DataFrame:
-        return (
-            rows.join(F.broadcast(budgets), "host")
-            .withColumn("rank_in_host", F.row_number().over(w))
-            .filter(F.col("rank_in_host") <= F.col("budget"))
-            .drop("budget", "need")
-        )
-
     if n_short == 0:
         return rank_and_admit(head)
     pass1 = rank_and_admit(
         head.join(F.broadcast(short), "host", "left_anti"))
     pass2 = rank_and_admit(
-        tagged_scan().join(F.broadcast(short), "host", "left_semi"))
+        tagged_scan(entries).join(F.broadcast(short), "host", "left_semi"))
     return pass1.unionByName(pass2)
 
 

@@ -1,12 +1,11 @@
-"""Ops D1/B3 — within-wave dedup + exact seen/frontier anti-joins.
+"""Op D1 — within-wave dedup — and new hosts' politeness budgets.
 
 D1 keeps, per canonical URL, the candidate with the minimum
 (priority, disc_seq) — the oracle's min-parent rule (§1.4.3) that makes
 ``disc_seq`` (and hence all later ordering) parallelism-independent.
 
-B3 is the exactness guarantee behind the bloom pre-filter: a plain
-``left_anti`` join.  Bloom may say "maybe seen" wrongly (FPR), never
-"new" wrongly, so ``definitely-new ∪ (maybe-seen ⟕̸ seen)`` is exact.
+The exact seen/frontier anti-joins behind the bloom pre-filter (op B3)
+run in the wave's collision backstop (plans/wave.py::_backstop).
 """
 
 from __future__ import annotations
@@ -37,10 +36,6 @@ def dedup_within_wave(cands: DataFrame) -> DataFrame:
         )
         .select("canon_url", *[F.col(f"_m.{c}").alias(c) for c in others])
     )
-
-
-def anti_join_exact(cands: DataFrame, seen: DataFrame) -> DataFrame:
-    return cands.join(seen.select("canon_url"), "canon_url", "left_anti")
 
 
 _BUDGET_SCHEMA = StructType([

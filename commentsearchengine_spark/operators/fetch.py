@@ -1,15 +1,18 @@
 """Ops F1/F2/F3 — deterministic simulated fetch + codecs + phash.
 
-``mapInPandas`` over the admitted URLs: one Arrow batch in, one out.
-Page content is a pure function of the 64-bit URL id (same numpy code
-as the sequential oracle — functions/imagecodec.py, fixtures/synth.py),
-so engine and reference produce bit-identical payloads and outlink sets.
+``mapInPandas`` over the admitted URLs.  Page content is a pure function
+of the 64-bit URL id (same numpy code as the sequential oracle —
+functions/imagecodec.py, fixtures/synth.py), so engine and reference
+produce bit-identical payloads and outlink sets.
 
 Python iterates over *rows* of each batch only to drive per-image numpy
 kernels (pixel synthesis, codec, phash are all vectorized per image);
-pixels never see a Python loop (SURVEY §7 hard-part 3).  Batch size is
-capped via spark.sql.execution.arrow.maxRecordsPerBatch because image
-rows are fat (SURVEY §4).
+pixels never see a Python loop (SURVEY §7 hard-part 3).  Input rows are
+slim URL rows and arrive at the session's Arrow batch size; the UDF
+slices each input batch so every output batch holds at most
+``batch_rows`` (EngineConfig.arrow_batch_rows) rows, because image rows
+are fat (SURVEY §4) — the batch size is a property of this stage, not
+of the session.
 
 In a real crawler this stage would be the HTTP fetch; its simulation
 keeps the scheduler's contract (CPU-heavy, per-URL independent work)
@@ -24,6 +27,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 
 from .. import schemas
+from ..config import EngineConfig
 from ..fixtures import synth
 from ..functions.imagecodec import payload_for
 
@@ -46,7 +50,17 @@ FETCHED_SCHEMA = (
 )
 
 
-def fetch_pages(admitted: DataFrame, wave: int, n_hosts: int) -> DataFrame:
+def batch_slices(batches: Iterator[pd.DataFrame],
+                 max_rows: int) -> Iterator[pd.DataFrame]:
+    """Each batch cut into consecutive slices of at most ``max_rows``
+    rows, in row order."""
+    for pdf in batches:
+        for lo in range(0, len(pdf), max_rows):
+            yield pdf.iloc[lo:lo + max_rows]
+
+
+def fetch_pages(admitted: DataFrame, wave: int, n_hosts: int,
+                batch_rows: int = EngineConfig.arrow_batch_rows) -> DataFrame:
     """admitted (canon_url, host, url_hash, depth, global_seq) → pages rows
     + canonicalized outlinks for expansion.
 
@@ -60,7 +74,7 @@ def fetch_pages(admitted: DataFrame, wave: int, n_hosts: int) -> DataFrame:
     drives the per-image numpy kernels."""
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+        for pdf in batch_slices(batches, batch_rows):
             image_ids: list = []
             blobs: list = []
             ws: list = []

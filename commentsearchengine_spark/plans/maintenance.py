@@ -27,11 +27,12 @@ from __future__ import annotations
 from pyspark.sql import SparkSession, functions as F
 
 from ..sources.icelite import Catalog
+from .wave import ROWS_PER_FILE, hash_clustered
 
 
 def compact_table(spark: SparkSession, cat: Catalog, table: str,
                   schema_ddl: str, cluster_col: str | None = "url_hash",
-                  rows_per_file: int = 1_000_000,
+                  rows_per_file: int = ROWS_PER_FILE,
                   min_files: int = 8,
                   tier_col: str | None = None) -> dict:
     """Rewrite ``table``'s current snapshot into ~total_rows /
@@ -81,10 +82,7 @@ def compact_table(spark: SparkSession, cat: Catalog, table: str,
         # file's cluster_col [min, max] collapses to a narrow range for
         # manifest pruning — the exact layout every reader expects,
         # via the same helper the wave writes use
-        from .wave import _with_hseg
-
-        df = _with_hseg(df, parts, col=cluster_col).repartition(
-            parts, "_hseg")
+        df = hash_clustered(df, parts, col=cluster_col)
         partition_cols = ["_hseg"]
         if tier_col is not None:
             df = df.withColumn("_tier", F.col(tier_col))

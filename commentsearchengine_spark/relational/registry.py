@@ -6,22 +6,13 @@ views named region/nation/customer/supplier/part/orders/lineitem/
 events/documents/embeddings over the same parquet files.
 
 The driver's correctness gate checks exactly the FIRST ``GATE_WINDOW``
-entries of the dict, in insertion order.  ``GATE_ORDER`` pins that window
-explicitly so adding a query can never silently evict a gated one.  The
-round-5 rotation (VERDICT r4 task #8): after r04 every registry entry
-has at least one driver-recorded row, so r05 optimizes FRESHNESS —
-slots 1–14 re-record the 14 entries whose only driver record is r03
-(the crawl/streaming/image/format demos — rows-only then;
-``csv_roundtrip``/``json_roundtrip`` gained exact DuckDB oracles in r5
-so those two slots now value-hash-check, and ``video_frame_sample``,
-recorded r04, has a pytest semantic oracle, tests/test_video.py), slots 15–38 re-certify the 24 oracle-paired
-entries whose last green row is r03 (everything r04's window skipped),
-and slots 39–50 are r04-green canaries chosen for risk: the queries
-REWRITTEN this round (``simhash`` — HOF plan, ``ngram_jaccard_pairs``
-— short-doc guard + scale guard) plus their pair consumers and the
-highest-traffic plans.  Unknown newcomers are appended at the END
-(never inside the window).  ``tests/test_registry_gate.py`` enforces
-these invariants.
+entries of the dict, in insertion order.  ``GATE_ORDER`` pins that
+window explicitly, so adding a query can never silently evict a gated
+one.  Invariants, checked at import and by
+``tests/test_registry_gate.py``: ``GATE_ORDER`` holds exactly
+``GATE_WINDOW`` unique, known names; a window entry without oracle SQL
+must be allow-listed in ``GATE_ROWS_ONLY_OK`` (rows-only by design); and
+every other query follows the window, never inside it.
 """
 
 from __future__ import annotations
@@ -30,12 +21,10 @@ from . import core, engine_queries, extras, pipeline, search, streaming_queries
 
 GATE_WINDOW = 50
 
-# Round-5 first-50 driver window: 14 rows-only freshness re-records +
-# 24 stale (r03-green) oracle-paired re-certifications + 12 r04-green
-# canaries led by this round's rewrites.
+# The gated window, in driver order.
 GATE_ORDER = [
-    # -- 14 entries whose only driver record is r03 (rows-only then;
-    # csv/json_roundtrip gained exact oracles in r5 so now value-check) --
+    # -- crawl / streaming / image / format / estimator demos: rows-only
+    # (GATE_ROWS_ONLY_OK) except csv/json_roundtrip, which value-check --
     "crawl_log",
     "crawl_frontier_depth",
     "crawl_lineage",
@@ -50,7 +39,7 @@ GATE_ORDER = [
     "hll_sketch_distinct",
     "approx_distinct",
     "search_stemmed_index",
-    # -- 24 oracle-paired entries whose last green row is r03 --------------
+    # -- oracle-paired relational, text, UDF and format entries ----------
     "median_quantity",
     "window_rank_orders",
     "topk_orders",
@@ -75,7 +64,7 @@ GATE_ORDER = [
     "unpivot_revenue",
     "grouped_arrow_stats",
     "map_in_arrow_doclen",
-    # -- 12 r04-green canaries: this round's rewrites first ----------------
+    # -- oracle-paired HOF, near-dup pair, search and join plans ---------
     "simhash",
     "simhash_near_pairs",
     "ngram_jaccard_pairs",
@@ -110,7 +99,7 @@ GATE_ROWS_ONLY_OK = {
 
 # Import-time invariants raise real exceptions (not asserts, which
 # python -O strips and would leave the driver's gate window unguarded
-# outside pytest — ADVICE r3).
+# outside pytest).
 _ALL: dict[str, tuple] = {}
 for mod in (core, search, pipeline, extras, engine_queries, streaming_queries):
     overlap = _ALL.keys() & mod.QUERIES.keys()

@@ -60,15 +60,11 @@ class Snapshot:
     # {"path": rel_path, "rows": n, "stats": {col: [min, max]}} (rows/stats
     # from the parquet footer at write time — the Iceberg-manifest analogue
     # backing file pruning and row counts without touching data files).
-    tables: dict[str, list[Any]]
+    tables: dict[str, list[dict]]
     row_counts: dict[str, int]
     state: dict[str, Any]
     metrics: dict[str, Any]
     created_at: float
-
-
-def _entry_path(entry: Any) -> str:
-    return entry["path"] if isinstance(entry, dict) else entry
 
 
 def uri_to_rel(uri: str, root: str) -> str:
@@ -148,8 +144,8 @@ _OPS = {
 }
 
 
-def entries_overlapping_segs(entries: list[Any], segs: set[int],
-                             shift: int, col: str = "url_hash") -> list[Any]:
+def entries_overlapping_segs(entries: list[dict], segs: set[int],
+                             shift: int, col: str = "url_hash") -> list[dict]:
     """Manifest entries whose ``col`` [min, max] stats could contain a
     value from any of the given hash SEGMENTS (seg = value >> shift,
     arithmetic/signed, so seg s covers [s << shift, ((s+1) << shift) - 1]).
@@ -170,7 +166,7 @@ def entries_overlapping_segs(entries: list[Any], segs: set[int],
 
     out = []
     for e in entries:
-        st = (e.get("stats") or {}).get(col) if isinstance(e, dict) else None
+        st = (e.get("stats") or {}).get(col)
         if st is None:
             out.append(e)
             continue
@@ -183,11 +179,9 @@ def entries_overlapping_segs(entries: list[Any], segs: set[int],
     return out
 
 
-def _may_match(entry: Any, where: list[tuple]) -> bool:
+def _may_match(entry: dict, where: list[tuple]) -> bool:
     """Conservative file-level predicate check: False only when the
     file's [min,max] PROVES no row can match (absent stats => keep)."""
-    if not isinstance(entry, dict):
-        return True
     stats = entry.get("stats") or {}
     for col, op, value in where:
         rng = stats.get(col)
@@ -204,7 +198,7 @@ class Catalog:
     """A directory-rooted multi-table snapshot catalog."""
 
     root: str
-    _staged: dict[str, list[Any]] = field(default_factory=dict)
+    _staged: dict[str, list[dict]] = field(default_factory=dict)
     # stage_write is called concurrently from driver threads (wave writes
     # of independent tables overlap — plans/wave.py); guard the staging map
     _lock: threading.Lock = field(default_factory=threading.Lock, repr=False)
@@ -295,20 +289,20 @@ class Catalog:
                 raise ValueError(
                     f"empty scan of table {table!r} needs schema_ddl")
             return spark.createDataFrame([], schema_ddl)
-        paths = [os.path.join(self.root, _entry_path(e)) for e in entries]
+        paths = [os.path.join(self.root, e["path"]) for e in entries]
         reader = spark.read
         if schema_ddl is not None:
             reader = reader.schema(schema_ddl)
         return reader.parquet(*paths)
 
-    def scan_entries(self, spark: SparkSession, entries: list[Any],
+    def scan_entries(self, spark: SparkSession, entries: list[dict],
                      schema_ddl: str) -> DataFrame:
         """Read exactly the given manifest entries (e.g. the subset of a
         table's files a predicate could not exclude — the caller's own
         scan planning over ``table_files``)."""
         if not entries:
             return spark.createDataFrame([], schema_ddl)
-        paths = [os.path.join(self.root, _entry_path(e)) for e in entries]
+        paths = [os.path.join(self.root, e["path"]) for e in entries]
         return spark.read.schema(schema_ddl).parquet(*paths)
 
     def table_files(self, table: str, snapshot_id: int | None = None,
@@ -318,13 +312,10 @@ class Catalog:
         entries = [] if snap is None else snap.tables.get(table, [])
         if where:
             entries = [e for e in entries if _may_match(e, where)]
-        return [
-            e if isinstance(e, dict) else {"path": e, "rows": None, "stats": {}}
-            for e in entries
-        ]
+        return list(entries)
 
     # ----------------------------------------------------------- writes
-    def stage_entries(self, table: str, entries: list[Any]) -> None:
+    def stage_entries(self, table: str, entries: list[dict]) -> None:
         """Seed the NEXT snapshot's file list for ``table`` with existing
         manifest entries (carry-forward without rewriting data files —
         the icelite analogue of Iceberg keeping untouched data files
@@ -334,7 +325,6 @@ class Catalog:
             self._staged[table] = list(entries)
 
     def stage_write(self, df: DataFrame, table: str, mode: str = "overwrite",
-                    partitions: int | None = None,
                     partition_cols: list[str] | None = None) -> list[dict]:
         """Write ``df`` as new Parquet files for ``table`` into the staging
         area of the NEXT snapshot.  ``mode='append'`` keeps the current
@@ -352,8 +342,6 @@ class Catalog:
             raise ValueError(f"unknown stage_write mode {mode!r}")
         rel_dir = os.path.join("data", table, uuid.uuid4().hex[:12])
         out_dir = os.path.join(self.root, rel_dir)
-        if partitions is not None:
-            df = df.repartition(partitions)
         writer = df.write.mode("error")
         if partition_cols:
             # value-exact file clustering (e.g. one frontier tier per
@@ -371,7 +359,7 @@ class Catalog:
                     rows, stats = _file_stats(full)
                     entries.append(
                         {"path": rel, "rows": rows, "stats": stats})
-        prev: list[Any] = []
+        prev: list[dict] = []
         if mode == "append":
             snap = self.load_snapshot()
             if snap is not None:
@@ -393,10 +381,9 @@ class Catalog:
             self._staged = {}
 
     def commit(self, wave: int, state: dict[str, Any] | None = None,
-               metrics: dict[str, Any] | None = None,
-               carry_tables: list[str] | None = None) -> int:
+               metrics: dict[str, Any] | None = None) -> int:
         """Atomically publish one snapshot pinning every staged table plus
-        (optionally) unchanged tables carried over from the parent.
+        every unstaged table carried over unchanged from the parent.
 
         Commit takes OWNERSHIP of the staging map at entry (under the
         lock): a stage_write racing past the caller's barrier stages
@@ -411,16 +398,10 @@ class Catalog:
             parent = self.load_snapshot()
             parent_id = None if parent is None else parent.snapshot_id
             sid = 1 if parent_id is None else parent_id + 1
-            tables: dict[str, list[str]] = {}
-            if parent is not None:
-                for t in (carry_tables if carry_tables is not None
-                          else list(parent.tables)):
-                    if t in parent.tables:
-                        tables[t] = parent.tables[t]
-            for t, entries in staged.items():
-                tables[t] = entries
+            tables = {} if parent is None else dict(parent.tables)
+            tables.update(staged)
             row_counts = {
-                t: sum(e.get("rows") or 0 for e in ents if isinstance(e, dict))
+                t: sum(e.get("rows") or 0 for e in ents)
                 for t, ents in tables.items()
             }
             snap = Snapshot(
@@ -494,11 +475,11 @@ class Catalog:
             snap = self.load_snapshot(sid)
             for ents in snap.tables.values():
                 for e in ents:
-                    live.add(os.path.normpath(_entry_path(e)))
+                    live.add(os.path.normpath(e["path"]))
         with self._lock:
             for ents in self._staged.values():
                 for e in ents:
-                    live.add(os.path.normpath(_entry_path(e)))
+                    live.add(os.path.normpath(e["path"]))
         cutoff = time.time() - grace_seconds
         removed_files = 0
         removed_bytes = 0

@@ -36,42 +36,79 @@ def test_resume_equivalence(spark):
 
 
 def test_failed_wave_is_resumable(spark, monkeypatch):
-    """A write failure mid-wave (here: the seen append, one of the
-    early writes that overlap the fetch) must abort the wave — surfaced
-    by the fail-fast poll at the next phase boundary — WITHOUT
-    committing anything; re-running the crawl then produces tables
-    bit-identical to a never-failed run (staged files of the dead wave
-    are replaced, the snapshot chain never saw it)."""
+    """A write failure in bootstrap (the hosts overwrite) or mid-wave
+    (the seen append, one of the early writes that overlap the fetch —
+    surfaced by the fail-fast poll at the next phase boundary) must
+    abort WITHOUT committing anything and without leaving a cached
+    relation in the session; re-running the crawl then produces tables
+    bit-identical to a never-failed run (staged files of the dead
+    attempts are replaced, the snapshot chain never saw them)."""
+    import pytest
+
     straight_root = tempfile.mkdtemp(prefix="icelite-nofail-")
     failed_root = tempfile.mkdtemp(prefix="icelite-failed-")
     cfg = EngineConfig(n_seeds=8, n_waves=2, n_buckets=16)
     orig = Catalog.stage_write
-    boom = {"armed": True}
+    armed: set = set()
+    cache = spark._jsparkSession.sharedState().cacheManager()
 
-    def flaky(self, df, table, mode="overwrite", partitions=None,
-              partition_cols=None):
-        if boom["armed"] and table == "seen" and mode == "append":
-            boom["armed"] = False
-            raise RuntimeError("injected seen-write failure")
-        return orig(self, df, table, mode, partitions, partition_cols)
+    def flaky(self, df, table, mode="overwrite", partition_cols=None):
+        if (table, mode) in armed:
+            armed.discard((table, mode))
+            raise RuntimeError(f"injected {table}-write failure")
+        return orig(self, df, table, mode, partition_cols)
 
     try:
         cat_a = run_crawl(spark, straight_root, cfg)
         monkeypatch.setattr(Catalog, "stage_write", flaky)
-        try:
-            run_crawl(spark, failed_root, cfg)
-            raise AssertionError("injected failure did not propagate")
-        except RuntimeError as e:
-            assert "injected seen-write failure" in str(e)
-        # the dead wave must not have committed
-        snap = Catalog(failed_root).load_snapshot()
-        assert snap.wave == 0
+        spark.catalog.clearCache()
+        # bootstrap fails: no snapshot at all; then wave 1 fails: only
+        # the bootstrap snapshot
+        for table, mode, committed_wave in (("hosts", "overwrite", None),
+                                            ("seen", "append", 0)):
+            armed.add((table, mode))
+            with pytest.raises(RuntimeError,
+                               match=f"injected {table}-write failure"):
+                run_crawl(spark, failed_root, cfg)
+            assert cache.isEmpty(), f"{table} failure leaked a cache"
+            snap = Catalog(failed_root).load_snapshot()
+            assert (snap.wave if snap else None) == committed_wave
         # resume after the fault clears: identical final state
         cat_b = run_crawl(spark, failed_root, cfg)
         assert _tables(spark, cat_a) == _tables(spark, cat_b)
     finally:
         shutil.rmtree(straight_root, ignore_errors=True)
         shutil.rmtree(failed_root, ignore_errors=True)
+
+
+def test_wave_metrics_carry_the_bench_keys(spark):
+    """The committed wave metrics carry every key perfbench/crawl_wide.py
+    and tools/skew_drive.py read.  They read phases and write_secs with
+    .get(name, 0.0), so a renamed key would silently read 0."""
+    root = tempfile.mkdtemp(prefix="icelite-metrics-")
+    try:
+        cat = run_crawl(spark, root,
+                        EngineConfig(n_seeds=8, n_waves=2, n_buckets=16))
+        snap = cat.load_snapshot()
+        m = snap.metrics
+        assert snap.wave == m["wave"] == 2
+        assert {"admit", "fetch_write", "expand", "writes"} <= set(m["phases"])
+        assert {"frontier_new", "hosts", "lineage",
+                "bloom_shards"} <= set(m["write_secs"])
+        assert {"seen_files_scanned",
+                "frontier_files_scanned"} <= set(m["backstop"])
+        for k in ("admitted", "wall_sec", "frontier_files_rewritten",
+                  "frontier_files_carried", "hosts_files_rewritten"):
+            assert isinstance(m[k], (int, float)), k
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def test_arrow_batch_rows_is_plan_only():
+    """The fetch's Arrow batch size changes no table, so resuming with a
+    different --arrow-batch-rows must be allowed."""
+    assert (EngineConfig(arrow_batch_rows=2048).config_hash()
+            == EngineConfig().config_hash())
 
 
 def test_time_travel(spark):

@@ -80,3 +80,31 @@ def test_resize_box_upscale():
     mixed = ic.resize_box(np.full((2, 5, 3), 7, dtype=np.uint8), 2, 4)
     assert mixed.shape == (4, 2, 3)
     assert (mixed == 7).all()
+
+
+def test_png_decode_rejects_non_png():
+    import pytest
+
+    with pytest.raises(ValueError, match="not a PNG"):
+        ic.png_decode(b"GIF89a" + bytes(32))
+
+
+def test_png_decode_rejects_filtered_scanline():
+    """A scanline with filter type 1 (Sub) would decode to garbage
+    pixels if the guard were skipped (asserts vanish under python -O)."""
+    import struct
+    import zlib
+
+    import pytest
+
+    uh, w, h, arr = next(_arrs())
+    raw = np.empty((h, w * 3 + 1), dtype=np.uint8)
+    raw[:, 0] = 0
+    raw[:, 1:] = arr.reshape(h, w * 3)
+    raw[h // 2, 0] = 1
+    ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
+    data = (ic._PNG_SIG + ic._chunk(b"IHDR", ihdr)
+            + ic._chunk(b"IDAT", zlib.compress(raw.tobytes()))
+            + ic._chunk(b"IEND", b""))
+    with pytest.raises(ValueError, match="filter"):
+        ic.png_decode(data)
