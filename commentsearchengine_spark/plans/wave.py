@@ -124,18 +124,23 @@ def _state(cfg: EngineConfig, global_seq: int, bloom_nbits: int) -> dict:
 
 
 def _lineage_singlepass(wave: int, n_buckets: int,
-                        sources: dict[str, DataFrame]) -> DataFrame:
+                        sources: dict[str, DataFrame],
+                        weights: dict[str, str] | None = None) -> DataFrame:
     """Per-bucket lineage counters in ONE shuffle: tag each contributing
     relation with its counter name, union, and pivot with sum(when) —
     instead of one groupBy + full-outer join per counter (which costs a
     job chain per wave; at 100 TB each extra barrier is a cluster-wide
-    stall).  Derived counters: politeness_deferred = frontier - admitted,
+    stall).  Each source row counts 1, or the value of its ``weights``
+    column.  Derived counters: politeness_deferred = frontier - admitted,
     deduped = allowed - queued (same algebra as the oracle)."""
+    weights = weights or {}
 
     def tag(name: str) -> DataFrame:
+        w = weights.get(name)
         return sources[name].select(
             bucket_col(F.col("host"), n_buckets).alias("bucket"),
             F.lit(name).alias("tag"),
+            (F.col(w) if w else F.lit(1)).cast("long").alias("_w"),
         )
 
     tagged = None
@@ -146,7 +151,8 @@ def _lineage_singlepass(wave: int, n_buckets: int,
     def n(name: str | None):
         if name is None or name not in sources:
             return F.lit(0).cast("long")
-        return F.sum(F.when(F.col("tag") == name, 1).otherwise(0)).cast("long")
+        return F.sum(F.when(F.col("tag") == name, F.col("_w"))
+                     .otherwise(0)).cast("long")
 
     # counter -> (positive tag, negative tag)
     spec: dict[str, tuple[str | None, str | None]] = {
@@ -333,9 +339,9 @@ def run_wave(spark: SparkSession, cat: Catalog, cfg: EngineConfig) -> dict:
       join; the few "maybe" collisions verify via broadcast-collision
       joins that STREAM the big tables (one columnar key-column scan,
       zero shuffle of frontier/seen);
-    - politeness_deferred derives from the lineage history's backlog
-      algebra (Σ queued − Σ fetched per bucket) instead of counting the
-      live frontier;
+    - politeness_deferred derives from the wave-start hosts rows'
+      frontier_rows backlog (the same column admission reads) instead of
+      counting the live frontier or re-reading lineage history;
     - write parallelism is row-proportional (ROWS_PER_FILE), never a
       fixed coalesce(1) barrier."""
     t0 = time.monotonic()
@@ -368,6 +374,7 @@ class _Admitted:
     n: int
     host_segs: set[int]      # host_hash segments of the admitted hosts
     hosts: DataFrame         # every hosts row, LIVE tokens as of wave start
+                             # (admission; lineage's frontier_rows backlog)
     seen_new: DataFrame      # this wave's seen rows (= the admitted URLs)
     frontier_files: list[dict]   # the wave-start frontier manifest
     touched: list[dict]      # frontier files that lost a row
@@ -840,46 +847,6 @@ def _next_hosts(ctx: _WaveCtx, adm: _Admitted, new_read: DataFrame,
     return rows, carried, hit, rows_bound
 
 
-def _next_lineage(ctx: _WaveCtx, adm: _Admitted, exp: _Expanded,
-                  new_read: DataFrame) -> DataFrame:
-    """L1: current counters + history backlog, NO frontier scan."""
-    wave = ctx.wave
-    cur = _lineage_singlepass(
-        wave, ctx.cfg.n_buckets,
-        {
-            "admitted": adm.rows,
-            "allowed": exp.allowed,
-            "queued": new_read,
-            "robots_blocked": exp.blocked,
-        },
-    ).drop("politeness_deferred")
-    # backlog(bucket) = frontier rows at wave start = Σ queued − Σ fetched
-    # over all prior lineage rows (wave 0 queued the seeds)
-    hist = (
-        ctx.cat.scan(ctx.spark, "lineage", schema_ddl=schemas.LINEAGE)
-        .groupBy("bucket")
-        .agg((F.sum("queued") - F.sum("fetched")).alias("backlog"))
-    )
-    return (
-        cur.join(hist, "bucket", "full")
-        .filter(
-            (F.coalesce("backlog", F.lit(0)) > 0) | F.col("wave").isNotNull()
-        )
-        .select(
-            F.lit(wave).alias("wave"),
-            "bucket",
-            *[
-                F.coalesce(c, F.lit(0)).cast("long").alias(c)
-                for c in ("fetched", "queued", "deduped", "robots_blocked")
-            ],
-            (
-                F.coalesce("backlog", F.lit(0))
-                - F.coalesce("fetched", F.lit(0))
-            ).cast("long").alias("politeness_deferred"),
-        )
-    )
-
-
 def _finish(ctx: _WaveCtx, adm: _Admitted, exp: _Expanded,
             early: dict[str, Future], t0: float) -> dict:
     """S3/K1: remaining writes + the atomic commit; returns the metrics."""
@@ -891,7 +858,21 @@ def _finish(ctx: _WaveCtx, adm: _Admitted, exp: _Expanded,
     shards_next, nbits_next = _next_bloom(ctx, adm, exp, new_read)
     hosts_rows, hosts_carried, hosts_rewritten, hosts_bound = _next_hosts(
         ctx, adm, new_read, new_host_segs, exp.n_uniq)
-    lineage = _next_lineage(ctx, adm, exp, new_read)
+    # L1: politeness_deferred = wave-start backlog − admitted per bucket.
+    # hosts.frontier_rows IS each host's exact backlog (+queued −admitted,
+    # maintained by _next_hosts), so the frontier tag weights the
+    # wave-start hosts rows by it — no frontier or lineage-history scan
+    lineage = _lineage_singlepass(
+        ctx.wave, ctx.cfg.n_buckets,
+        {
+            "admitted": adm.rows,
+            "allowed": exp.allowed,
+            "queued": new_read,
+            "robots_blocked": exp.blocked,
+            "frontier": adm.hosts.filter(F.col("frontier_rows") > 0),
+        },
+        weights={"frontier": "frontier_rows"},
+    )
 
     # seen / crawl_log / frontier-carry-forward were launched right after
     # admission and have been overlapping the fetch+expansion; what

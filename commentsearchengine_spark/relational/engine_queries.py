@@ -217,7 +217,7 @@ VIDEO_SAMPLE_EVERY = 2
 
 def q_video_frame_sample(spark: SparkSession, sf: str) -> DataFrame:
     """Multimodal FRAME-SAMPLE over an opaque video binary column
-    (closes VERDICT r3 "missing" #5 — the brief's video modality).
+    (the video modality).
 
     A "video" here is a deterministic clip container: ``n_frames`` raw
     RGB frames of one (w, h) concatenated into a single binary, frame i

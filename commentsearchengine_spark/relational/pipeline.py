@@ -52,7 +52,7 @@ JACCARD_THRESHOLD = 0.5
 # Spark's sequence(a, b) steps DOWNWARD when a > b (sequence(0, -1) =
 # [0, -1]), so the naive bound over a 0/1-token doc indexes w[size]
 # and, under this Spark's default ANSI mode, throws INVALID_ARRAY_INDEX
-# — the whole query dies on one short document (ADVICE r4).  DuckDB's
+# — the whole query dies on one short document.  DuckDB's
 # range() is empty for non-positive bounds, so only the Spark side
 # needs the CASE guard; array() resolves to array<string>, matching the
 # transform branch.
@@ -127,7 +127,7 @@ NGRAM_JACCARD_THRESHOLD = 0.2
 NGRAM_SAMPLE_MOD = 25
 # Past this many SAMPLED query docs the broadcast side (fat shingle
 # arrays, not slim keys) would OOM with a generic Spark error; fail
-# loud instead, like cosine_near_dup_pairs (VERDICT r4 wrong #4).
+# loud instead, like cosine_near_dup_pairs.
 # Module-level so tests can monkeypatch it down.
 NGRAM_QUERY_MAX_DOCS = 1_000_000
 
@@ -166,7 +166,7 @@ def q_ngram_jaccard_pairs(spark: SparkSession, sf: str) -> DataFrame:
     # steps -1 when start > stop), and _toks[i+1] then throws
     # INVALID_ARRAY_INDEX under ANSI mode.  The DuckDB twin's
     # range(greatest(len-2, 0)) is empty for short docs, so only this
-    # side needs the guard (ADVICE r4, medium).
+    # side needs the guard.
     sh = F.array_distinct(
         F.expr(
             "CASE WHEN size(_toks) >= 3 THEN"
@@ -361,8 +361,8 @@ def q_simhash(spark: SparkSession, sf: str) -> DataFrame:
 
     The previous plan exploded tokens x SIMHASH_BITS (a 32x row blowup
     of the token relation through TWO groupBy shuffles); at 100 TB the
-    token relation IS the corpus, so that shuffle dominates everything
-    (VERDICT r4 wrong #2).  The md5-per-(term, bit) CPU is inherent to
+    token relation IS the corpus, so that shuffle dominates everything.
+    The md5-per-(term, bit) CPU is inherent to
     the (portable) hash definition, but the shuffle is not: the 32 bit
     votes fold per document inside nested aggregate() HOFs, so the
     whole query is a projection — embarrassingly parallel, zero
@@ -862,7 +862,7 @@ def q_cosine_near_dup_pairs(spark: SparkSession, sf: str) -> DataFrame:
     recall monitor that stays runnable there is
     `ann_lsh_recall_sampled` (query-stratum truth, O(n*s)).  The
     explicit guard below turns the otherwise-inevitable broadcast OOM
-    past validation scale into a clear error (ADVICE r3)."""
+    past validation scale into a clear error."""
     (emb,) = load(spark, sf, "embeddings")
     n_vecs = emb.count()  # parquet metadata count: cheap, no scan
     if n_vecs > 1_000_000:
@@ -962,7 +962,7 @@ RECALL_SAMPLE_MOD = 10
 
 
 def q_ann_lsh_recall_sampled(spark: SparkSession, sf: str) -> DataFrame:
-    """Scale-safe LSH recall monitor (VERDICT r3 task #4): recall of the
+    """Scale-safe LSH recall monitor: recall of the
     hyperplane-LSH near-dup pairs against an exact ground truth built
     ONLY for a deterministic query stratum (vec_id % RECALL_SAMPLE_MOD
     == 0).
@@ -1102,7 +1102,7 @@ def q_ivf_ann_topk(spark: SparkSession, sf: str) -> DataFrame:
     # column; cid and the probe lists are cheap array ops over it
     # (Catalyst does not CSE aggregate-HOF chains across expression
     # copies, so inlining the chain in assign + probe put it in the
-    # plan 3x — VERDICT r2 #5)
+    # plan 3x)
     dotted = emb.withColumn("dots", F.expr(_centroid_dots()))
     # the coalesce(-1) is inert (dots is never null) but makes cid
     # NON-NULLABLE, so the join's inferred isnotnull(cid) constraint

@@ -24,10 +24,13 @@ FRONTIER = (
 SEEN = "canon_url string, url_hash long, first_wave int"
 
 # frontier_rows = this host's live frontier backlog, maintained
-# incrementally (+queued, -admitted) so admission can prove whether the
-# pruned head scan fully covers a host WITHOUT scanning the frontier
-# (operators/admission.py::admit_pruned).
-# Lazy-refill carry-forward (round 5, VERDICT r4 #2): `tokens` is the
+# incrementally (+queued, -admitted).  Two readers rely on it being
+# exact, so neither scans the frontier: admission proves whether the
+# pruned head scan fully covers a host (operators/admission.py::
+# admit_pruned), and each wave's lineage sums it per bucket into
+# politeness_deferred (plans/wave.py::_finish).
+# Lazy-refill carry-forward, so a throttled wave rewrites O(touched
+# hosts) rather than O(hosts): `tokens` is the
 # balance as of the END of wave `last_wave`, NOT necessarily the latest
 # wave — a host untouched since then (no admissions, no backlog change)
 # carries its file byte-unchanged across commits, and readers

@@ -23,8 +23,9 @@ scratch:
   engine tables plus the wave counter, config hash, and metrics —
   that is the crawl checkpoint (BASELINE.json:6,14 "resumable from
   Iceberg snapshot checkpoints ... per-partition lineage + metrics").
-- **Manifest stats**: per-file row counts feed lineage totals and let
-  scans skip empty tables without touching Parquet footers.
+- **Manifest stats**: per-file row counts size the next wave's bloom
+  (plans/wave.py ``_next_bloom``) and let scans skip empty tables
+  without touching Parquet footers.
 """
 
 from __future__ import annotations
@@ -80,8 +81,8 @@ def uri_to_rel(uri: str, root: str) -> str:
     Both sides go through ``os.path.realpath``: on a symlinked catalog
     root (e.g. /tmp -> /private/tmp) the JVM reports RESOLVED paths, so
     relativizing against the unresolved root would put every touched
-    file in the caller's unmatched set and abort the wave (fail-loud
-    but environment-sensitive — ADVICE r3).
+    file in the caller's unmatched set and abort the wave — loud, but
+    dependent on the host's filesystem layout rather than on the data.
     """
     from urllib.parse import unquote, urlparse
 

@@ -5,6 +5,7 @@ parallelism, which proves the §1.4 tiebreaks are total."""
 
 import shutil
 import tempfile
+from collections import Counter
 
 import numpy as np
 import pytest
@@ -13,6 +14,7 @@ import commentsearchengine_spark.schemas as S
 from commentsearchengine_spark.config import EngineConfig
 from commentsearchengine_spark.functions import imagecodec as ic
 from commentsearchengine_spark.plans.wave import run_crawl
+from commentsearchengine_spark.sources.icelite import Catalog
 from oracle.seqcrawl import run_oracle
 
 
@@ -53,11 +55,22 @@ def _assert_match(spark, cat, o):
         .collect())
     assert eng_lin == sorted(o.lineage)
 
-    eng_fr = sorted(
-        (r["canon_url"], r["disc_seq"], r["priority"])
-        for r in cat.scan(spark, "frontier", schema_ddl=S.FRONTIER).collect())
+    fr_rows = cat.scan(spark, "frontier", schema_ddl=S.FRONTIER).collect()
+    eng_fr = sorted((r["canon_url"], r["disc_seq"], r["priority"])
+                    for r in fr_rows)
     assert eng_fr == sorted(
         (u, e.disc_seq, e.priority) for u, e in o.frontier.items())
+
+    # hosts.frontier_rows is each host's exact committed backlog: admission
+    # and lineage's politeness_deferred both read it, so it must equal the
+    # host's count of frontier rows (0 for a host with none)
+    backlog = Counter(r["host"] for r in fr_rows)
+    host_rows = cat.scan(spark, "hosts", schema_ddl=S.HOSTS).select(
+        "host", "frontier_rows").collect()
+    eng_backlog = {r["host"]: r["frontier_rows"] for r in host_rows}
+    assert len(eng_backlog) == len(host_rows)  # one row per host
+    assert set(backlog) <= set(eng_backlog)
+    assert eng_backlog == {h: backlog[h] for h in eng_backlog}
 
 
 @pytest.mark.parametrize("n_seeds,n_waves", [(3, 3), (25, 4)])
@@ -165,14 +178,26 @@ def test_exact_match_fully_throttled(spark):
         shutil.rmtree(root, ignore_errors=True)
 
 
-def test_exact_match_mixed_throttle(spark):
+def test_exact_match_mixed_throttle(spark, monkeypatch):
     """Spread seeds over hosts with different capacities at a tiny
     budget scale: some hosts admit a trickle, others are throttled to
     zero every wave — the oracle parity must hold through the mixed
-    admit/defer algebra (19 admissions over 4 waves in this fixture)."""
+    admit/defer algebra (19 admissions over 4 waves in this fixture).
+    The crawl never reads the lineage table: politeness_deferred comes
+    from hosts.frontier_rows, so per-wave cost does not grow with the
+    lineage history."""
     cfg = EngineConfig(n_seeds=8, n_waves=4, n_buckets=16,
                        seed_spread_hosts=6, budget_scale=0.11)
-    cat, root = _run_engine(spark, cfg)
+    scan = Catalog.scan
+
+    def no_lineage_scan(self, spark, table, *args, **kwargs):
+        if table == "lineage":
+            raise AssertionError("a crawl wave read the lineage table")
+        return scan(self, spark, table, *args, **kwargs)
+
+    with monkeypatch.context() as m:
+        m.setattr(Catalog, "scan", no_lineage_scan)
+        cat, root = _run_engine(spark, cfg)
     try:
         o = run_oracle(8, 4, 16, cfg.n_hosts,
                        seed_spread_hosts=6, budget_scale=0.11)

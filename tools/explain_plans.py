@@ -27,8 +27,8 @@ PICKS = [
                            "joined back after pair dedup"),
     ("ann_lsh_pairs", "bucket-key equi-join, HOF projections in codegen"),
     ("bucketed_colocated_join", "SortMergeJoin with NO Exchange on either\n                               side (bucketed+sorted scans; only the final\n                               groupBy exchanges)"),
-    ("search_tfidf", "ONE token scan: per-doc conditional tf counts\n                     (localCheckpoint), single-row stats relation joined\n                     via 1-row BroadcastNestedLoop; no repeated\n                     Generate posexplode (round-4 rewrite — the checkpoint\n                     boundary shows as a scan over the materialized RDD)"),
-    ("simhash", "ONE narrow projection (round-5 rewrite): 32 bit votes\n                fold per document inside nested aggregate() HOFs — zero\n                Exchange, no token explode, no groupBy"),
+    ("search_tfidf", "ONE token scan: per-doc conditional tf counts\n                     (localCheckpoint), single-row stats relation joined\n                     via 1-row BroadcastNestedLoop; no repeated\n                     Generate posexplode (the localCheckpoint\n                     boundary shows as a scan over the materialized RDD)"),
+    ("simhash", "ONE narrow projection: 32 bit votes\n                fold per document inside nested aggregate() HOFs — zero\n                Exchange, no token explode, no groupBy"),
     ("simhash_near_pairs", "Hamming-chunk banding: equi-join on\n                           (chunk_idx, chunk_value), bit_count verify on\n                           candidates — NO all-pairs BNL"),
     ("ivf_ann_topk", "the 16-centroid dot HOF chain appears ONCE per side\n                     (materialized `dots` projection), assignment and\n                     probe both derive from that column"),
     ("ngram_jaccard_pairs", "broadcast of the deterministic query stratum's\n                            shingle sets; ONE corpus scan streams past it\n                            (BroadcastNestedLoop on the != predicate is\n                            correct here: the build side is |S| = n/25\n                            rows, the exact-Jaccard filter runs on the\n                            stream) — no all-pairs shuffle"),

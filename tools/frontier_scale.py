@@ -15,7 +15,7 @@ plans/wave.py write_tiered), then times:
 - plain ``admit`` over the full frontier (the pre-pruning plan): scales
   with total rows — the O(frontier)-per-wave term the pruned path
   removes;
-- the COLLISION BACKSTOP (round 5): a maybe-set of 50k keys (half
+- the COLLISION BACKSTOP: a maybe-set of 50k keys (half
   present, half fresh) is resolved via the seg-pruned semi-join
   (icelite.entries_overlapping_segs over the hash-clustered files) vs
   the full-table scan it replaces; pruned cost should track the maybe
@@ -160,12 +160,12 @@ def main(n_rows: int, cores: int, head_rows: int) -> None:
             frontier_full.filter(F.col("priority") <= 1)).count()
         t_dedup = time.monotonic() - t0
 
-        # ---- collision backstop probe (round 5) ------------------------
+        # ---- collision backstop probe ----------------------------------
         # maybe set = 25k urls that ARE in the frontier + 25k fresh —
         # the wave loop's exact verify of bloom "maybe" rows.  The
         # production path prunes to the files the keys' url_hash
         # segments could live in (writes above are hash-clustered);
-        # the contrast scans every file, the pre-round-5 plan.
+        # the contrast scans every file, the unpruned plan.
         entries = cat.table_files("frontier")
 
         def backstop_probe(n_maybe: int) -> dict:
@@ -201,7 +201,10 @@ def main(n_rows: int, cores: int, head_rows: int) -> None:
                 cat.scan_entries(spark, hit, S.FRONTIER).select("canon_url")
                 .join(F.broadcast(keys), "canon_url", "left_semi").count())
             t_pruned_bs = time.monotonic() - t0
-            assert n_coll_pruned == n_coll_full, "pruning changed the verdict"
+            if n_coll_pruned != n_coll_full:
+                raise RuntimeError(
+                    f"pruning changed the verdict: {n_coll_pruned} "
+                    f"collisions pruned vs {n_coll_full} full")
             maybe.unpersist()
             return {
                 "maybe_rows": n_maybe,

@@ -12,9 +12,9 @@ so a handful of hosts own the whole wave — run three ways:
   unsalted   salt_factor=1, salt_factor_max=1 (one fetch partition key
              per host: at most SPREAD tasks carry all fetch CPU
              regardless of cluster size)
-  fixed-32   salt_factor=32, salt_factor_max=32 (the pre-round-4 knob)
+  fixed-32   salt_factor=32, salt_factor_max=32 (a fixed fan-out)
   adaptive   shipped defaults (floor 32, measured per-host growth,
-             cap 1024 — VERDICT r3 task #6)
+             cap 1024)
 
 Reported per config: total wall, summed fetch_write phase, URLs/s.
 
