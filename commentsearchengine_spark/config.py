@@ -30,7 +30,8 @@ class EngineConfig:
     bloom_k: int = 5
     # probe strategy switch (operators/bloom.py): filters up to this total
     # size broadcast to workers (shuffle-free probe); larger ones cogroup
-    # per shard.  Does not affect results, only the physical plan.
+    # per shard.  Does not affect results, only the physical plan
+    # (plan-only knob)
     bloom_broadcast_max_bytes: int = 64 << 20
     # hot-host salting (op P0b): every host gets at least `salt_factor`
     # salted fetch sub-partitions (the floor keeps the repartition key
@@ -74,8 +75,9 @@ class EngineConfig:
     seen_compact_every: int = 64
 
     _PLAN_ONLY = ("n_waves", "backstop_broadcast_max_rows", "salt_factor",
-                  "salt_factor_max", "bloom_nbits", "arrow_batch_rows",
-                  "hosts_compact_every", "seen_compact_every")
+                  "salt_factor_max", "bloom_nbits", "bloom_broadcast_max_bytes",
+                  "arrow_batch_rows", "hosts_compact_every",
+                  "seen_compact_every")
 
     def config_hash(self) -> str:
         """Hash of the semantics-affecting parameters.  ``n_waves`` is a

@@ -17,8 +17,8 @@ snapshot commit (the wave barrier), per BASELINE.json:6.  The dataflow:
      └─ deep-tier files carried forward BYTE-UNTOUCHED in the manifest
 
 ``run_wave`` runs the phases in this order over one ``_WaveCtx``, each
-returning what the next reads: _admit → _start_early_writes → _fetch →
-_expand → _finish (remaining writes + commit).
+returning what the next reads: _admit → _fetch (+ the pages write) →
+_expand → _finish (every other table write, then the commit).
 
 Every ordering decision uses the total orders of §1.4, so the result is
 bit-identical to oracle/seqcrawl.py at ANY partition count — that is the
@@ -28,9 +28,10 @@ bit-identical to oracle/seqcrawl.py at ANY partition count — that is the
 from __future__ import annotations
 
 import time
-from concurrent.futures import Future, ThreadPoolExecutor
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession, Window, functions as F
 
 from .. import schemas
@@ -178,8 +179,8 @@ def universe_hosts(cfg: EngineConfig) -> list[str]:
 @dataclass
 class _WaveCtx:
     """What the phases of one wave (or bootstrap) share, including the
-    resources ``release`` frees: persisted relations, bloom probe
-    broadcasts and the early-write pool."""
+    resources ``release`` frees: persisted relations and bloom probe
+    broadcasts."""
 
     spark: SparkSession
     cat: Catalog
@@ -190,7 +191,6 @@ class _WaveCtx:
     write_secs: dict[str, float] = field(default_factory=dict)
     persists: list[DataFrame] = field(default_factory=list)
     broadcasts: list = field(default_factory=list)
-    pool: ThreadPoolExecutor | None = None
     tick: float = field(default_factory=time.monotonic)
 
     @property
@@ -226,24 +226,27 @@ class _WaveCtx:
     def stage_all(self, writes: list[tuple[str, DataFrame, str, list | None]]
                   ) -> None:
         # independent writes from concurrent driver threads: wall time
-        # is max(write), not sum(write)
+        # is max(write), not sum(write).  Under pinned-thread mode a plain
+        # pool thread starts with empty Spark local properties; the
+        # wrapper hands each write the calling thread's properties and
+        # job tags, so a description or tag set on the driver thread
+        # reaches every write job
+        inherit = inheritable_thread_target(self.spark)
         with ThreadPoolExecutor(max_workers=len(writes)) as pool:
             futs = [
-                pool.submit(self.timed(name, self.cat.stage_write, df, name,
-                                       mode, partition_cols=pcols))
+                pool.submit(inherit(self.timed(
+                    name, self.cat.stage_write, df, name, mode,
+                    partition_cols=pcols)))
                 for name, df, mode, pcols in writes
             ]
             for fut in futs:
                 fut.result()
 
     def release(self) -> None:
-        # an exception mid-wave must not leak this wave's early-write
-        # threads (they finish into the never-committed staging area; the
-        # next attempt re-stages every table), cached relations, or bloom
-        # broadcast bitmap blocks (scoped per wave; see
-        # bloom.release_broadcasts)
-        if self.pool is not None:
-            self.pool.shutdown(wait=True)
+        # an exception mid-wave must not leak this wave's cached
+        # relations or bloom broadcast bitmap blocks (scoped per wave; see
+        # bloom.release_broadcasts).  No write outlives stage_all, which
+        # joins its threads before it returns or raises
         for df in self.persists:
             df.unpersist()
         bloom.release_broadcasts(self.broadcasts)
@@ -357,10 +360,9 @@ def run_wave(spark: SparkSession, cat: Catalog, cfg: EngineConfig) -> dict:
     ctx = _WaveCtx(spark, cat, cfg, wave=snap.wave + 1, snap=snap)
     try:
         adm = _admit(ctx)
-        early = _start_early_writes(ctx, adm)
-        fetch_log = _fetch(ctx, adm, early)
-        exp = _expand(ctx, adm, fetch_log, early)
-        return _finish(ctx, adm, exp, early, t0)
+        fetch_log = _fetch(ctx, adm)
+        exp = _expand(ctx, adm, fetch_log)
+        return _finish(ctx, adm, exp, t0)
     finally:
         ctx.release()
 
@@ -434,87 +436,10 @@ def _admit(ctx: _WaveCtx) -> _Admitted:
         frontier_files=entries, touched=touched, untouched=untouched)
 
 
-# ---------------------------------------------------------- early writes
-
-
-def _write_tiered(ctx: _WaveCtx, df: DataFrame, n_rows: int) -> list[dict]:
-    """Stage-append ``df`` to the frontier; returns the new entries."""
-    # one directory PER (PRIORITY VALUE, url_hash SEGMENT) (partitionBy
-    # on duplicated columns — value-exact, no range sampling): every
-    # file's [min,max] priority collapses to a point (admission tier
-    # pruning stays sharp even when a wave writes a handful of rows per
-    # tier) AND its url_hash range collapses to one narrow segment (the
-    # collision backstop prunes frontier files by maybe-key segment).
-    # The repartition is keyed on the hash segment, NOT on priority —
-    # that would funnel each tier through a single task.
-    n_parts = ctx.parts_for(n_rows)
-    return ctx.cat.stage_write(
-        hash_clustered(df.withColumn("_tier", F.col("priority")), n_parts),
-        "frontier", mode="stage-append", partition_cols=["_tier", "_hseg"])
-
-
-def _write_frontier_base(ctx: _WaveCtx, adm: _Admitted) -> None:
-    """Carry untouched frontier files; rewrite touched ones minus admitted."""
-    # stage_entries REPLACES the staged list, so it must precede every
-    # stage-append to frontier — including the new-entries write, which
-    # therefore waits on this future (see _finish)
-    ctx.cat.stage_entries("frontier", adm.untouched)
-    if adm.touched:
-        touched_rows = sum(e.get("rows") or 0 for e in adm.touched)
-        # broadcast the admitted keys only while they fit (same guard as
-        # the maybe backstop): a 10^8-admitted wave would blow Spark's
-        # broadcast limit — fall back to a shuffle anti
-        keys = adm.rows.select("canon_url")
-        if adm.n <= ctx.cfg.backstop_broadcast_max_rows:
-            keys = F.broadcast(keys)
-        rewrite = ctx.cat.scan_entries(
-            ctx.spark, adm.touched, schemas.FRONTIER
-        ).join(keys, "canon_url", "left_anti").select(*FRONTIER_COLS)
-        _write_tiered(ctx, rewrite, touched_rows)
-
-
-def _start_early_writes(ctx: _WaveCtx, adm: _Admitted) -> dict[str, Future]:
-    """Launch the seen / crawl_log appends and the frontier carry-forward."""
-    # everything derivable from ADMITTED alone runs on driver threads
-    # CONCURRENT with the fetch+expansion jobs: its latency hides behind
-    # the wave's dominant CPU instead of extending the post-expansion
-    # barrier.  All three read only the materialized admitted cache; the
-    # snapshot commit still happens once, after every future is collected
-    parts = ctx.parts_for(adm.n)
-    crawl_log_new = adm.rows.select(
-        F.lit(ctx.wave).alias("wave"), "host", "rank_in_host", "canon_url",
-        "global_seq")
-    ctx.pool = ThreadPoolExecutor(max_workers=3)
-    return {
-        # hash-clustered append: each seen file covers a narrow url_hash
-        # range, so later waves' collision backstops prune to the files
-        # their maybe-keys hash into instead of streaming every key ever
-        # admitted (which would make the backstop O(discovered) per wave)
-        "seen": ctx.pool.submit(
-            ctx.cat.stage_write, hash_clustered(adm.seen_new, parts),
-            "seen", "append", partition_cols=["_hseg"]),
-        "crawl_log": ctx.pool.submit(
-            ctx.cat.stage_write, crawl_log_new.repartition(parts),
-            "crawl_log", "append"),
-        "frontier_base": ctx.pool.submit(_write_frontier_base, ctx, adm),
-    }
-
-
-def _raise_failed(early: dict[str, Future]) -> None:
-    # fail-fast poll (non-blocking): an early write that died (disk full,
-    # broadcast OOM) should abort the wave at the NEXT phase boundary,
-    # not after minutes of fetch+expansion compute whose snapshot could
-    # never commit anyway
-    for fut in early.values():
-        if fut.done() and fut.exception() is not None:
-            raise fut.exception()
-
-
 # ------------------------------------------------------- fetch + pages
 
 
-def _fetch(ctx: _WaveCtx, adm: _Admitted,
-           early: dict[str, Future]) -> DataFrame:
+def _fetch(ctx: _WaveCtx, adm: _Admitted) -> DataFrame:
     """P0b + F1/F2/F3: salted fetch → pages write; returns its re-read."""
     # The fetch output is fat (image bytes): caching it for a second
     # consumer spills gigabytes once execution memory competes (measured
@@ -557,10 +482,8 @@ def _fetch(ctx: _WaveCtx, adm: _Admitted,
     fetched = fetch_pages(
         salted.repartition(par * 4, "host", "salt"), ctx.wave, cfg.n_hosts,
         batch_rows=cfg.arrow_batch_rows)
-    _raise_failed(early)
     pages_entries = ctx.cat.stage_write(fetched, "pages", "append")
     ctx.mark("fetch_write")
-    _raise_failed(early)
     return ctx.cat.scan_entries(ctx.spark, pages_entries, FETCHED_SCHEMA)
 
 
@@ -577,8 +500,8 @@ class _Expanded:
     backstop: dict           # backstop file-pruning counters (metrics)
 
 
-def _expand(ctx: _WaveCtx, adm: _Admitted, fetch_log: DataFrame,
-            early: dict[str, Future]) -> _Expanded:
+def _expand(ctx: _WaveCtx, adm: _Admitted,
+            fetch_log: DataFrame) -> _Expanded:
     """C1 → P2 → D1 → B2/B3: robots gate, dedup, bloom probe, backstop."""
     spark, cat, cfg, wave = ctx.spark, ctx.cat, ctx.cfg, ctx.wave
     # outlinks arrive pre-canonicalized from the fetch pass (see fetch.py)
@@ -653,7 +576,6 @@ def _expand(ctx: _WaveCtx, adm: _Admitted, fetch_log: DataFrame,
     # via an Observation riding the frontier write (_write_new_frontier)
     new_entries = fresh.unionByName(surviving_maybe).select(*FRONTIER_COLS)
     ctx.mark("expand")
-    _raise_failed(early)
     return _Expanded(allowed=allowed, blocked=blocked,
                      new_entries=new_entries, n_uniq=int(n_uniq),
                      nbits=nbits, backstop=backstop)
@@ -717,6 +639,41 @@ def _backstop(ctx: _WaveCtx, adm: _Admitted, maybe: DataFrame,
 # ------------------------------------------------- final writes + commit
 
 
+TIER_COLS = ["_tier", "_hseg"]
+
+
+def _tiered(ctx: _WaveCtx, df: DataFrame, n_rows: int) -> DataFrame:
+    """``df`` laid out for a frontier stage-append under TIER_COLS."""
+    # one directory PER (PRIORITY VALUE, url_hash SEGMENT) (partitionBy
+    # on duplicated columns — value-exact, no range sampling): every
+    # file's [min,max] priority collapses to a point (admission tier
+    # pruning stays sharp even when a wave writes a handful of rows per
+    # tier) AND its url_hash range collapses to one narrow segment (the
+    # collision backstop prunes frontier files by maybe-key segment).
+    # The repartition is keyed on the hash segment, NOT on priority —
+    # that would funnel each tier through a single task.
+    return hash_clustered(df.withColumn("_tier", F.col("priority")),
+                          ctx.parts_for(n_rows))
+
+
+def _frontier_rewrite(ctx: _WaveCtx, adm: _Admitted
+                      ) -> tuple[str, DataFrame, str, list]:
+    """The touched frontier files minus the admitted rows, as a
+    ``stage_all`` write."""
+    touched_rows = sum(e.get("rows") or 0 for e in adm.touched)
+    # broadcast the admitted keys only while they fit (same guard as the
+    # maybe backstop): a 10^8-admitted wave would blow Spark's broadcast
+    # limit — fall back to a shuffle anti
+    keys = adm.rows.select("canon_url")
+    if adm.n <= ctx.cfg.backstop_broadcast_max_rows:
+        keys = F.broadcast(keys)
+    rewrite = ctx.cat.scan_entries(
+        ctx.spark, adm.touched, schemas.FRONTIER
+    ).join(keys, "canon_url", "left_anti").select(*FRONTIER_COLS)
+    return ("frontier", _tiered(ctx, rewrite, touched_rows), "stage-append",
+            TIER_COLS)
+
+
 def _write_new_frontier(ctx: _WaveCtx, exp: _Expanded
                         ) -> tuple[DataFrame, int, set[int]]:
     """Write the new frontier rows; returns (their re-read, exact count,
@@ -735,15 +692,16 @@ def _write_new_frontier(ctx: _WaveCtx, exp: _Expanded
         # — new_entries ⊆ uniq, so n_uniq == 0 proves n_new == 0
         return ctx.spark.createDataFrame([], schemas.FRONTIER), 0, set()
     obs = Observation()
+    observed = exp.new_entries.observe(
+        obs, F.count(F.lit(1)).alias("n"),
+        # host_hash segments of the hosts gaining backlog — rides the
+        # write action for free, feeds the hosts carry-forward split
+        F.collect_set(F.shiftright(
+            murmur64_col(F.col("host")), BACKSTOP_SEG_SHIFT)).alias("hsegs"))
     new_files = ctx.timed(
-        "frontier_new", _write_tiered, ctx,
-        exp.new_entries.observe(
-            obs, F.count(F.lit(1)).alias("n"),
-            # host_hash segments of the hosts gaining backlog — rides the
-            # write action for free, feeds the hosts carry-forward split
-            F.collect_set(F.shiftright(
-                murmur64_col(F.col("host")), BACKSTOP_SEG_SHIFT)).alias("hsegs")),
-        exp.n_uniq)()
+        "frontier_new", ctx.cat.stage_write,
+        _tiered(ctx, observed, exp.n_uniq), "frontier", "stage-append",
+        partition_cols=TIER_COLS)()
     return (ctx.cat.scan_entries(ctx.spark, new_files, schemas.FRONTIER),
             int(obs.get["n"] or 0), set(obs.get["hsegs"] or []))
 
@@ -848,12 +806,15 @@ def _next_hosts(ctx: _WaveCtx, adm: _Admitted, new_read: DataFrame,
 
 
 def _finish(ctx: _WaveCtx, adm: _Admitted, exp: _Expanded,
-            early: dict[str, Future], t0: float) -> dict:
-    """S3/K1: remaining writes + the atomic commit; returns the metrics."""
+            t0: float) -> dict:
+    """S3/K1: every table write after the fetch's pages write, then the
+    atomic commit; returns the metrics."""
     cat = ctx.cat
-    # the frontier staged list must already hold carried + rewritten
-    # entries before the new-entries stage-append (stage_entries replaces)
-    early["frontier_base"].result()
+    # stage_entries REPLACES a table's staged list, so each seeding
+    # precedes that table's stage-appends: untouched frontier files carry
+    # forward byte-untouched, the new entries and the touched-file
+    # rewrite are added on top
+    cat.stage_entries("frontier", adm.untouched)
     new_read, n_new, new_host_segs = _write_new_frontier(ctx, exp)
     shards_next, nbits_next = _next_bloom(ctx, adm, exp, new_read)
     hosts_rows, hosts_carried, hosts_rewritten, hosts_bound = _next_hosts(
@@ -874,21 +835,26 @@ def _finish(ctx: _WaveCtx, adm: _Admitted, exp: _Expanded,
         weights={"frontier": "frontier_rows"},
     )
 
-    # seen / crawl_log / frontier-carry-forward were launched right after
-    # admission and have been overlapping the fetch+expansion; what
-    # remains depends on the expansion output.  The hosts staged list =
-    # carried files + the rewrite's new files; the stage_entries seeding
-    # must precede the stage-append (it replaces)
+    # the hosts staged list = carried files + the rewrite's new files
     cat.stage_entries("hosts", hosts_carried)
+    parts = ctx.parts_for(adm.n)
     writes: list[tuple[str, DataFrame, str, list | None]] = [
         ("lineage", lineage.coalesce(1), "append", None),
         ("bloom_shards", shards_next, "overwrite", None),
+        # hash-clustered append: each seen file covers a narrow url_hash
+        # range, so later waves' collision backstops prune to the files
+        # their maybe-keys hash into instead of streaming every key ever
+        # admitted (which would make the backstop O(discovered) per wave)
+        ("seen", hash_clustered(adm.seen_new, parts), "append", ["_hseg"]),
+        ("crawl_log", adm.rows.select(
+            F.lit(ctx.wave).alias("wave"), "host", "rank_in_host",
+            "canon_url", "global_seq").repartition(parts), "append", None),
     ]
     if hosts_rows is not None:
         writes.insert(0, ("hosts", hosts_rows, "stage-append", ["_hseg"]))
+    if adm.touched:
+        writes.insert(0, _frontier_rewrite(ctx, adm))
     ctx.stage_all(writes)
-    for fut in early.values():
-        fut.result()
     ctx.mark("writes")
     wall = time.monotonic() - t0
     metrics = {

@@ -386,8 +386,10 @@ class Catalog:
         """Atomically publish one snapshot pinning every staged table plus
         every unstaged table carried over unchanged from the parent.
 
-        Commit takes OWNERSHIP of the staging map at entry (under the
-        lock): a stage_write racing past the caller's barrier stages
+        The engine's writers never outlive their write group
+        (plans/wave.py's stage_all joins them before the commit), but
+        commit still takes OWNERSHIP of the staging map at entry (under
+        the lock): a stage_write from a caller that does race it stages
         for the NEXT commit instead of being dropped or corrupting the
         iteration.  On failure the taken entries are restored for any
         table not re-staged since (best effort — the catalog is

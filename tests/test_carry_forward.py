@@ -1,7 +1,7 @@
-"""Frontier carry-forward commits (SURVEY §1.3 + round-2 wave design):
-deep-tier files whose min priority exceeds the deepest admitted row must
-survive across waves as the SAME manifest entries (same data-file paths,
-never rewritten), while oracle parity holds throughout.
+"""Frontier carry-forward commits (SURVEY §1.3, plans/wave.py): deep-tier
+files whose min priority exceeds the deepest admitted row must survive
+across waves as the SAME manifest entries (same data-file paths, never
+rewritten), while oracle parity holds throughout.
 
 A politeness-bound crawl (tiny budgets, many seeds) guarantees waves
 admit only shallow rows while deep discoveries pile up — the production

@@ -4,9 +4,11 @@ resume to N — final tables identical (op K2)."""
 import shutil
 import tempfile
 
+import pytest
+
 import commentsearchengine_spark.schemas as S
 from commentsearchengine_spark.config import EngineConfig
-from commentsearchengine_spark.plans.wave import run_crawl
+from commentsearchengine_spark.plans.wave import _WaveCtx, run_crawl
 from commentsearchengine_spark.sources.icelite import Catalog
 
 
@@ -36,15 +38,13 @@ def test_resume_equivalence(spark):
 
 
 def test_failed_wave_is_resumable(spark, monkeypatch):
-    """A write failure in bootstrap (the hosts overwrite) or mid-wave
-    (the seen append, one of the early writes that overlap the fetch —
-    surfaced by the fail-fast poll at the next phase boundary) must
-    abort WITHOUT committing anything and without leaving a cached
+    """A write failure in bootstrap (the hosts overwrite) or in a wave
+    (the seen append, inside the final write group; the new-frontier
+    stage-append, after the carried frontier files are already staged)
+    must abort WITHOUT committing anything and without leaving a cached
     relation in the session; re-running the crawl then produces tables
     bit-identical to a never-failed run (staged files of the dead
-    attempts are replaced, the snapshot chain never saw them)."""
-    import pytest
-
+    attempts are discarded, the snapshot chain never saw them)."""
     straight_root = tempfile.mkdtemp(prefix="icelite-nofail-")
     failed_root = tempfile.mkdtemp(prefix="icelite-failed-")
     cfg = EngineConfig(n_seeds=8, n_waves=2, n_buckets=16)
@@ -62,10 +62,11 @@ def test_failed_wave_is_resumable(spark, monkeypatch):
         cat_a = run_crawl(spark, straight_root, cfg)
         monkeypatch.setattr(Catalog, "stage_write", flaky)
         spark.catalog.clearCache()
-        # bootstrap fails: no snapshot at all; then wave 1 fails: only
-        # the bootstrap snapshot
+        # bootstrap fails: no snapshot at all; then wave 1 fails twice:
+        # only the bootstrap snapshot
         for table, mode, committed_wave in (("hosts", "overwrite", None),
-                                            ("seen", "append", 0)):
+                                            ("seen", "append", 0),
+                                            ("frontier", "stage-append", 0)):
             armed.add((table, mode))
             with pytest.raises(RuntimeError,
                                match=f"injected {table}-write failure"):
@@ -104,11 +105,33 @@ def test_wave_metrics_carry_the_bench_keys(spark):
         shutil.rmtree(root, ignore_errors=True)
 
 
-def test_arrow_batch_rows_is_plan_only():
-    """The fetch's Arrow batch size changes no table, so resuming with a
-    different --arrow-batch-rows must be allowed."""
-    assert (EngineConfig(arrow_batch_rows=2048).config_hash()
-            == EngineConfig().config_hash())
+@pytest.mark.parametrize("knob", [{"arrow_batch_rows": 2048},
+                                  {"bloom_broadcast_max_bytes": 0}],
+                         ids=lambda k: next(iter(k)))
+def test_plan_only_knob_keeps_config_hash(knob):
+    """The fetch's Arrow batch size and the bloom probe strategy change
+    no table, so resuming with a different value must be allowed."""
+    assert EngineConfig(**knob).config_hash() == EngineConfig().config_hash()
+
+
+def test_stage_all_passes_local_properties(spark):
+    """Every write of a wave's write group runs with the driver thread's
+    Spark local properties, so a job description or tag set there
+    reaches the write jobs."""
+    sc = spark.sparkContext
+    seen = []
+
+    class RecordingCatalog:
+        def stage_write(self, df, table, mode, partition_cols=None):
+            seen.append(sc.getLocalProperty("cse.probe"))
+
+    sc.setLocalProperty("cse.probe", "x")
+    try:
+        _WaveCtx(spark, RecordingCatalog(), EngineConfig(), wave=0).stage_all(
+            [("a", None, "append", None), ("b", None, "append", None)])
+    finally:
+        sc.setLocalProperty("cse.probe", None)
+    assert seen == ["x", "x"]
 
 
 def test_time_travel(spark):
@@ -140,8 +163,6 @@ def test_resume_refuses_wrong_layout_or_config(spark):
     they hold under python -O."""
     import json
     import os
-
-    import pytest
 
     from commentsearchengine_spark.plans.wave import run_wave
 

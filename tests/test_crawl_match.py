@@ -208,10 +208,10 @@ def test_exact_match_mixed_throttle(spark, monkeypatch):
 
 
 def test_hosts_carry_forward_throttled(spark):
-    """VERDICT r4 #2: a throttled wave's hosts write is O(touched), not
-    O(hosts).  Fully-throttled waves (zero admissions, zero discoveries)
-    must carry EVERY hosts file byte-untouched — and the lazily-carried
-    balances still reconstruct to the oracle's exactly."""
+    """A throttled wave's hosts write is O(touched hosts), not O(hosts).
+    Fully-throttled waves (zero admissions, zero discoveries) must carry
+    EVERY hosts file byte-untouched — and the lazily-carried balances
+    still reconstruct to the oracle's exactly."""
     cfg = EngineConfig(n_seeds=8, n_waves=4, n_buckets=16,
                        budget_scale=0.11)
     cat, root = _run_engine(spark, cfg)

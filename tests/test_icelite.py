@@ -103,7 +103,7 @@ def test_uri_to_rel_decodes_and_resolves_symlinks(tmp_path):
     """input_file_name() URIs are URL-encoded and (on symlinked roots,
     e.g. /tmp -> /private/tmp) may come back RESOLVED from the JVM;
     uri_to_rel must land on the manifest's root-relative path in every
-    combination (ADVICE r3)."""
+    combination (encoded or not, symlinked or resolved)."""
     from commentsearchengine_spark.sources.icelite import uri_to_rel
 
     real = tmp_path / "real root"  # space forces percent-encoding

@@ -1,6 +1,6 @@
-"""Regression tests for the round-5 pipeline fixes (ADVICE r4 medium,
-VERDICT r4 tasks #5/#6): short-document shingle safety under ANSI mode,
-the shuffle-free simhash plan, and the ngram validation-scale guard.
+"""Pipeline guards: shingling stays safe on documents shorter than one
+shingle under ANSI mode, the simhash plan runs without a shuffle, and
+the ngram and cosine pair queries refuse inputs beyond validation scale.
 """
 
 from __future__ import annotations
@@ -70,8 +70,8 @@ def test_ngram_guard_raises_past_validation_scale(
 
 
 def test_cosine_guard_still_raises(spark, sf_dir, monkeypatch):
-    # sibling guard (ADVICE r3) keeps working: shrink the limit under
-    # the sf0.001 corpus size
+    # the cosine pair query's validation-scale guard raises too: shrink
+    # the limit under the sf0.001 corpus size
     import commentsearchengine_spark.relational.pipeline as pl
 
     real = pl.q_cosine_near_dup_pairs.__wrapped__ if hasattr(

@@ -1,4 +1,4 @@
-"""Guard the driver's first-50 correctness window (VERDICT r2, Next round #1/#8).
+"""Guard the driver's first-50 correctness window.
 
 The driver's CORRECTNESS gate checks exactly the first ``GATE_WINDOW``
 entries of ``registry.QUERIES`` in dict order.  These tests make registry

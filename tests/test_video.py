@@ -1,6 +1,6 @@
-"""Semantic oracle for the video frame-sampler (VERDICT r4 task #4):
-`video_frame_sample` was rows-only — its phash/motion arithmetic had no
-twin anywhere.  This recomputes every output row with a straight-line
+"""Semantic oracle for the video frame-sampler: `video_frame_sample`'s
+phash/motion arithmetic is checked value by value, not just by row
+count.  This recomputes every output row with a straight-line
 pure-Python/numpy oracle (same imagecodec primitives, independent frame
 slicing) and asserts exact equality, including the sampling edges."""
 
