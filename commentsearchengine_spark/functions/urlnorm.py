@@ -25,6 +25,7 @@ from urllib.parse import urlsplit, urlunsplit
 _UNRESERVED = set(
     "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz0123456789-._~"
 )
+_HEXDIGITS = set("0123456789abcdefABCDEF")
 _DEFAULT_PORTS = {"http": "80", "https": "443"}
 _TRACKING_EXACT = {"gclid", "fbclid"}
 
@@ -44,13 +45,12 @@ def _norm_pct(s: str, safe: set[str]) -> str:
         c = s[i]
         if c == "%" and i + 3 <= n:
             hx = s[i + 1 : i + 3]
-            try:
-                b = int(hx, 16)
-            except ValueError:
+            if not (hx[0] in _HEXDIGITS and hx[1] in _HEXDIGITS):
+                # int(hx, 16) would also take a sign, blank or '_'
                 out.append("%25")  # stray '%' — escape it
                 i += 1
                 continue
-            ch = chr(b)
+            ch = chr(int(hx, 16))
             if ch in _UNRESERVED:
                 out.append(ch)
             else:

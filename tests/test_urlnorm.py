@@ -2,7 +2,7 @@
 
 import string
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 from commentsearchengine_spark.functions.urlnorm import (
     canonicalize,
@@ -48,6 +48,8 @@ def test_idempotent_on_cases():
 
 
 @given(st.text(alphabet=string.printable, max_size=120))
+@example("%-1")  # int("-1", 16) parses; a sign is not a hex digit
+@example("% f")
 @settings(max_examples=300, deadline=None)
 def test_total_and_idempotent(s):
     c = canonicalize(s)  # never raises
