@@ -16,6 +16,7 @@ Formats:
 
 from __future__ import annotations
 
+import functools
 import struct
 import zlib
 
@@ -219,28 +220,102 @@ def phash64(arr: np.ndarray) -> int:
     return val - (1 << 64) if val >= (1 << 63) else val
 
 
-# ------------------------------------------------ one-shot payload builder
+# ------------------------------------------------------ payload builder
+
+PAYLOAD_COLUMNS = ("image_id", "bytes", "w", "h", "fmt", "caption", "phash")
+
+
+def stored_pixels(arr: np.ndarray, fmt: str) -> np.ndarray:
+    """The pixels ``decode(encode(arr, fmt), fmt, w, h)`` returns: raw
+    and png are lossless, qlossy keeps the even floor it encodes.  The
+    payload kernel hashes these without running the decoder; the
+    round-trip tests pin the equality."""
+    return arr & 0xFE if fmt == "qlossy" else arr
+
+
+@functools.lru_cache(maxsize=None)
+def _phash_blocks(h: int, w: int) -> tuple[np.ndarray, np.ndarray]:
+    """phash64's 8×8 grid for an h×w image: each pixel's block id
+    (row-major, uint8) and the 64 block areas.  ``dims_for`` allows
+    49×49 sizes, so the cache is bounded; the arrays are read-only
+    because every caller shares them."""
+    _, r_lens = _split_starts(h)
+    _, c_lens = _split_starts(w)
+    rows = np.repeat(np.arange(8, dtype=np.uint8), r_lens.astype(np.intp))
+    cols = np.repeat(np.arange(8, dtype=np.uint8), c_lens.astype(np.intp))
+    ids = (rows[:, None] * np.uint8(8) + cols[None, :]).ravel()
+    areas = np.outer(r_lens, c_lens).ravel()
+    ids.setflags(write=False)
+    areas.setflags(write=False)
+    return ids, areas
+
+
+# images per phash pass: a pass holds ~45 bytes of temporaries per pixel,
+# and every Python worker runs one (tracemalloc: 150 MB peak for a
+# 3,277-row slice in one pass, 29 MB in passes of 256); passes of 64 to
+# 4,096 images ran at the same speed
+_PHASH_CHUNK = 256
+
+
+def _phash_batch(images: list[np.ndarray]) -> list[int]:
+    """``phash64`` of every image, with one ``np.bincount`` summing
+    every 8×8 block of the batch.  Channel sums are integers, so block
+    sums are exact in float64 whatever the summation order, and each
+    block mean is the same correctly rounded quotient phash64 takes.
+    Each row's 64-value mean is reduced on its own, as phash64 reduces
+    it, so bits at exact block-vs-mean ties match too."""
+    n = len(images)
+    if n == 0:
+        return []
+    grids = [_phash_blocks(a.shape[0], a.shape[1]) for a in images]
+    sizes = [a.shape[0] * a.shape[1] for a in images]
+    rgb = np.concatenate([a.reshape(-1) for a in images]).reshape(-1, 3)
+    # three strided adds: a sum over an axis of length 3 is ~9x slower
+    gray = rgb[:, 0].astype(np.int32) + rgb[:, 1] + rgb[:, 2]
+    ids = (np.concatenate([g[0] for g in grids]).astype(np.int64)
+           + np.repeat(np.arange(0, 64 * n, 64, dtype=np.int64), sizes))
+    sums = np.bincount(ids, weights=gray, minlength=64 * n).reshape(n, 64)
+    small = sums / np.stack([g[1] for g in grids])
+    means = np.array([row.mean() for row in small])
+    packed = np.packbits(small > means[:, None], axis=1)
+    return packed.view(">u8").ravel().astype(np.int64).tolist()
+
+
+def payload_columns(url_hashes: list[int], hosts: list[str],
+                    wave: int) -> dict[str, list]:
+    """The deterministic page payloads of a batch of fetched URLs, as
+    the ``PAYLOAD_COLUMNS`` of the binding ``pages`` input shape
+    (BASELINE.json:15), one list per column in input order.
+
+    phash is taken over the stored pixels (``stored_pixels``), which
+    equal the decoded bytes by the codec round-trip invariant, so it is
+    what a reader of the table reproduces and is well-defined for lossy
+    rows too; no row is decoded here."""
+    cols: dict[str, list] = {k: [] for k in PAYLOAD_COLUMNS}
+    stored: list[np.ndarray] = []
+    for url_hash, host in zip(url_hashes, hosts, strict=True):
+        if len(stored) == _PHASH_CHUNK:
+            cols["phash"] += _phash_batch(stored)
+            stored = []
+        w, h = dims_for(url_hash)
+        fmt = fmt_for(url_hash)
+        image_id = image_id_for(url_hash)
+        arr = synth_pixels(url_hash, w, h)
+        cols["image_id"].append(image_id)
+        cols["bytes"].append(encode(arr, fmt))
+        cols["w"].append(w)
+        cols["h"].append(h)
+        cols["fmt"].append(fmt)
+        cols["caption"].append(caption_for(image_id, host, wave))
+        stored.append(stored_pixels(arr, fmt))
+    cols["phash"] += _phash_batch(stored)
+    return cols
+
 
 def payload_for(url_hash: int, host: str, wave: int) -> dict:
-    """The full deterministic page payload for a fetched URL.
-
-    Returns the exact columns of the binding ``pages`` input shape
-    (BASELINE.json:15): image_id, bytes, w, h, fmt, caption, phash.
-    phash is computed over the encoded-then-decoded pixels (what a reader
-    of the table can reproduce), so it is well-defined for lossy rows too.
-    """
-    w, h = dims_for(url_hash)
-    fmt = fmt_for(url_hash)
-    image_id = image_id_for(url_hash)
-    arr = synth_pixels(url_hash, w, h)
-    data = encode(arr, fmt)
-    stored = decode(data, fmt, w, h)
-    return {
-        "image_id": image_id,
-        "bytes": data,
-        "w": w,
-        "h": h,
-        "fmt": fmt,
-        "caption": caption_for(image_id, host, wave),
-        "phash": phash64(stored),
-    }
+    """One URL's payload: ``payload_columns`` over a batch of one, so
+    the sequential oracle and the engine share one path.  phash is taken
+    over the stored pixels, which equal the decoded ones by the codec
+    round-trip invariant (tests/test_imagecodec.py)."""
+    cols = payload_columns([url_hash], [host], wave)
+    return {k: v[0] for k, v in cols.items()}

@@ -206,8 +206,10 @@ class Catalog:
     # parsed-manifest cache: manifests are IMMUTABLE once renamed into
     # place, and one wave issues ~10 load_snapshot calls (scans,
     # table_files, the commit's parent read) — re-parsing a 10^4-entry
-    # JSON each time is pure driver overhead.  Returned Snapshots must
-    # be treated as read-only (every caller is; grep'd per review).
+    # JSON each time is pure driver overhead.  Every caller of
+    # load_snapshot gets the cached object itself, so the cache is
+    # correct only while callers treat a returned Snapshot (its tables,
+    # state and metrics) as read-only.
     _snap_cache: dict[int, Snapshot] = field(
         default_factory=dict, repr=False)
 

@@ -1,6 +1,8 @@
-"""Codec roundtrips + PSNR bound + phash determinism (SURVEY §5.2-5.4)."""
+"""Codec roundtrips + PSNR bound + phash determinism (SURVEY §5.2-5.4),
+and the batch payload kernel pinned to its per-row definition."""
 
 import numpy as np
+import pytest
 
 from commentsearchengine_spark.functions import imagecodec as ic
 
@@ -34,6 +36,75 @@ def test_phash_deterministic_and_packed():
         p1, p2 = ic.phash64(arr), ic.phash64(arr.copy())
         assert p1 == p2
         assert -(1 << 63) <= p1 < (1 << 63)
+
+
+@pytest.mark.parametrize("fmt", ic.FMTS)
+@pytest.mark.parametrize("w,h", [(16, 16), (64, 64), (16, 64), (37, 23)])
+def test_decode_returns_stored_pixels(fmt, w, h):
+    """The round-trip invariant the payload kernel relies on when it
+    hashes the stored pixels without decoding them."""
+    arr = ic.synth_pixels(w * 1000 + h, w, h)
+    dec = ic.decode(ic.encode(arr, fmt), fmt, w, h)
+    expected = arr & 0xFE if fmt == "qlossy" else arr
+    assert np.array_equal(dec, expected)
+    assert np.array_equal(ic.stored_pixels(arr, fmt), expected)
+
+
+def _reference_payload(url_hash, host, wave):
+    """The per-row definition: phash over the decoded pixels."""
+    w, h = ic.dims_for(url_hash)
+    fmt = ic.fmt_for(url_hash)
+    image_id = ic.image_id_for(url_hash)
+    data = ic.encode(ic.synth_pixels(url_hash, w, h), fmt)
+    return {
+        "image_id": image_id, "bytes": data, "w": w, "h": h, "fmt": fmt,
+        "caption": ic.caption_for(image_id, host, wave),
+        "phash": ic.phash64(ic.decode(data, fmt, w, h)),
+    }
+
+
+def test_payload_columns_match_reference():
+    rng = np.random.default_rng(20240611)
+    hashes = [int(v) for v in rng.integers(-2**63, 2**63 - 1, size=2048,
+                                           dtype=np.int64)]
+    hosts = [f"site{i % 13:03d}.example.org" for i in range(len(hashes))]
+    ref = [_reference_payload(uh, host, 5) for uh, host in zip(hashes, hosts)]
+    assert {p["fmt"] for p in ref} == set(ic.FMTS)
+    assert len({(p["w"], p["h"]) for p in ref}) > 500
+    # the engine's slice sizes: uneven cuts, then the whole batch
+    for cut in (820, len(hashes)):
+        got = []
+        for lo in range(0, len(hashes), cut):
+            cols = ic.payload_columns(hashes[lo:lo + cut],
+                                      hosts[lo:lo + cut], 5)
+            assert tuple(cols) == ic.PAYLOAD_COLUMNS
+            assert len({len(v) for v in cols.values()}) == 1
+            got += [dict(zip(cols, row)) for row in zip(*cols.values())]
+        assert got == ref
+    assert ic.payload_for(hashes[7], hosts[7], 5) == ref[7]
+
+
+def test_phash_batch_matches_phash64_at_ties():
+    """Block-constant images whose block means tie with the image mean:
+    the batch pass must take the same mean bit for bit."""
+    def blocky(h, w, col_values):
+        _, c_lens = ic._split_starts(w)
+        row = np.repeat(np.array(col_values, dtype=np.uint8),
+                        c_lens.astype(int))
+        return np.repeat(np.repeat(row[None, :, None], h, 0), 3, 2)
+
+    images = [
+        np.full((16, 16, 3), 100, dtype=np.uint8),
+        np.zeros((64, 64, 3), dtype=np.uint8),
+        blocky(16, 16, [10, 10, 20, 20, 20, 20, 30, 30]),
+        blocky(23, 41, [10, 10, 20, 20, 20, 20, 30, 30]),
+        blocky(64, 17, [30, 20, 10, 20, 20, 10, 20, 30]),
+    ] + [ic.synth_pixels(s, 19 + s, 50 - s) for s in range(5)]
+    assert ic._phash_batch(images) == [ic.phash64(a) for a in images]
+
+
+def test_payload_columns_empty_batch():
+    assert ic.payload_columns([], [], 1) == {k: [] for k in ic.PAYLOAD_COLUMNS}
 
 
 def test_payload_shape():
