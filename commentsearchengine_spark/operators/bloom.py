@@ -37,6 +37,10 @@ from ..config import EngineConfig
 FILL_TARGET = 0.25
 # fill = 1 - exp(-inserts/nbits) <= FILL_TARGET  <=>  inserts/nbits <= this
 _INSERTS_PER_BIT = 0.2877  # -ln(1 - FILL_TARGET)
+# probe strategy switch: filters up to this total size broadcast to
+# workers (shuffle-free probe); larger ones cogroup per shard.  Changes
+# only the physical plan, never a verdict.
+BROADCAST_MAX_BYTES = 64 << 20
 
 
 def sized_nbits(n_keys: int, cfg: EngineConfig, floor_nbits: int) -> int:
@@ -140,7 +144,7 @@ def probe(candidates: DataFrame, shards: DataFrame,
 
     Two physical strategies by filter size:
 
-    - **broadcast** (total bitmap ≤ cfg.bloom_broadcast_max_bytes): ship
+    - **broadcast** (total bitmap ≤ BROADCAST_MAX_BYTES): ship
       all shard bitmaps to every worker and probe via ``mapInPandas`` on
       the candidates' EXISTING partitioning — no shuffle, parallelism =
       candidate partitions, not n_shards.
@@ -163,7 +167,7 @@ def probe(candidates: DataFrame, shards: DataFrame,
     out_schema = StructType(
         candidates.schema.fields + [StructField("maybe_seen", BooleanType())])
 
-    if n_shards * (nbits // 8) <= cfg.bloom_broadcast_max_bytes:
+    if n_shards * (nbits // 8) <= BROADCAST_MAX_BYTES:
         bitmaps = {
             int(r["shard"]): np.frombuffer(bytes(r["bits"]), dtype=np.uint8)
             for r in shards.collect()

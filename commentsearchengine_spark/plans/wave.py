@@ -8,7 +8,7 @@ snapshot commit (the wave barrier), per BASELINE.json:6.  The dataflow:
      │                ├─ global_seq (O1: prefix-sum offsets, no global sort)
      │                ├─ crawl_log / seen append
      │                ├─ token-bucket + backlog update (P1)
-     │                └─ fetch (F1/F2/F3: mapInPandas, salted repartition P0b)
+     │                └─ fetch (F1/F2/F3: mapInPandas, P0b url_hash repartition)
      │                        └─ outlinks (pre-canonicalized, C1 in-pass)
      │                             └─ robots gate (P2, broadcast+HOF)
      │                                  └─ D1 dedup ─ bloom B2 (discovered set)
@@ -68,6 +68,27 @@ LAYOUT_VERSION = 4
 # finer than any realistic per-wave file count, so pruning resolution
 # is limited by file granularity, not by this constant.
 BACKSTOP_SEG_SHIFT = 48
+
+# Broadcast cap for the wave's key sets: bloom "maybe" sets up to this
+# many rows verify via broadcast collision joins (stream the big tables,
+# no shuffle), and admitted sets up to it broadcast into the frontier
+# rewrite's anti-join; larger sets fall back to plain shuffle anti-joins.
+# Plan-only: both strategies give identical tables.
+BROADCAST_MAX_ROWS = 500_000
+
+# Hosts carry-forward cadence: every this-many waves the hosts table
+# rewrites wholesale, normalizing every lazily-carried row to the
+# current wave, which bounds the effective_tokens fold depth.  Hosts row
+# staleness changes with it; effective balances and every parity table
+# do not.
+HOSTS_COMPACT_EVERY = 16
+
+# Seen-table auto-compaction cadence (plans/maintenance.py, run by
+# run_crawl between waves; 0 = offline-only): appends fragment each
+# url_hash segment across ~W files after W waves, degrading the
+# collision backstop's pruning resolution and growing the manifest with
+# wave count.  Content-preserving.
+SEEN_COMPACT_EVERY = 64
 
 # Row-proportional write partitioning: target rows per parquet file for
 # the per-wave table writes and the between-waves seen compaction.
@@ -440,7 +461,8 @@ def _admit(ctx: _WaveCtx) -> _Admitted:
 
 
 def _fetch(ctx: _WaveCtx, adm: _Admitted) -> DataFrame:
-    """P0b + F1/F2/F3: salted fetch → pages write; returns its re-read."""
+    """P0b + F1/F2/F3: url_hash-salted fetch → pages write; returns its
+    re-read."""
     # The fetch output is fat (image bytes): caching it for a second
     # consumer spills gigabytes once execution memory competes (measured
     # 3-8x wave slowdowns at 0.5-3.5 GB of page cache), and running the
@@ -449,46 +471,19 @@ def _fetch(ctx: _WaveCtx, adm: _Admitted) -> DataFrame:
     # expansion re-reads only the slim outlink columns from the
     # just-written parquet (columnar pruning never touches the bytes).
     cfg, par = ctx.cfg, ctx.par
-    # P0b, adaptive: the salt fan-out per host is derived from that
-    # host's MEASURED admitted count, not a fixed knob.  target_rows =
-    # an eighth of an even partition share, so even when two heavy
-    # (host, salt) keys hash into one partition the fetch stays
-    # balanced; s(h) = clamp(ceil(n_h / target_rows), salt_factor,
-    # salt_factor_max).  The floor keeps uniform waves' key space dense
-    # (hash balance); the cap bounds a 10^10-scale mega-host's key
-    # count.  The per-host counts aggregate the already-persisted
-    # admitted cache and broadcast (≤ one row per live host), riding the
-    # fetch job — no extra driver action.  Purely physical: admission
-    # order is fixed before this repartition.
-    # The salted keys land in `par` partitions, one Python task per
-    # core slot: each Python task costs its core a fixed hand-off before
-    # the UDF runs (~130 ms on a 4-core VM), so more tasks than slots
-    # add hand-off, not parallelism.  There, a standalone 13,106-URL
-    # fetch job ran at a median 12.6k URLs/s with 4 tasks, 11.7k with 8
-    # and 8.6k with 16, and the dense salted key space kept the longest
-    # of the 4 tasks at a median 1.06x (at most 1.21x) the mean task.
-    target_rows = max(1, adm.n // (par * 8) + 1)
-    host_salt = adm.rows.groupBy("host").agg(
-        F.count("*").alias("_n")
-    ).select(
-        "host",
-        F.least(
-            F.lit(cfg.salt_factor_max),
-            F.greatest(
-                F.lit(cfg.salt_factor),
-                F.ceil(F.col("_n") / F.lit(target_rows)),
-            ),
-        ).cast("int").alias("_s"),
-    )
-    salted = (
-        adm.rows.drop("_src_file")
-        .join(F.broadcast(host_salt), "host")
-        .withColumn("salt", F.pmod(F.hash("canon_url"), F.col("_s")))
-        .drop("_s")
-    )
+    # P0b: each row is salted by its own url_hash, so every host, hot or
+    # not, spreads over every fetch task; admission order is fixed
+    # before this repartition.  `par` partitions give one Python task
+    # per core slot: each Python task costs its core a fixed hand-off
+    # before the UDF runs (~130 ms on a 4-core VM), so more tasks than
+    # slots add hand-off, not parallelism.  There, a standalone
+    # 13,106-URL fetch job ran at a median 12.6k URLs/s with 4 tasks,
+    # 11.7k with 8 and 8.6k with 16.  Since the slowest task sets the
+    # fetch's wall time, tests/test_crawl_match.py pins the task balance
+    # of a one-host wave.
     fetched = fetch_pages(
-        salted.repartition(par, "host", "salt"), ctx.wave, cfg.n_hosts,
-        batch_rows=cfg.arrow_batch_rows)
+        adm.rows.drop("_src_file").repartition(par, "url_hash"), ctx.wave,
+        cfg.n_hosts, batch_rows=cfg.arrow_batch_rows)
     pages_entries = ctx.cat.stage_write(fetched, "pages", "append")
     ctx.mark("fetch_write")
     return ctx.cat.scan_entries(ctx.spark, pages_entries, FETCHED_SCHEMA)
@@ -624,7 +619,7 @@ def _backstop(ctx: _WaveCtx, adm: _Admitted, maybe: DataFrame,
     )
     frontier_scan = cat.scan_entries(
         spark, frontier_hit, schemas.FRONTIER).select("canon_url")
-    if n_maybe <= ctx.cfg.backstop_broadcast_max_rows:
+    if n_maybe <= BROADCAST_MAX_ROWS:
         # shuffle-free: ONE broadcast of the maybe keys streams the
         # pruned tables (columnar key-column scans, no shuffle, no build
         # side)
@@ -672,7 +667,7 @@ def _frontier_rewrite(ctx: _WaveCtx, adm: _Admitted
     # maybe backstop): a 10^8-admitted wave would blow Spark's broadcast
     # limit — fall back to a shuffle anti
     keys = adm.rows.select("canon_url")
-    if adm.n <= ctx.cfg.backstop_broadcast_max_rows:
+    if adm.n <= BROADCAST_MAX_ROWS:
         keys = F.broadcast(keys)
     rewrite = ctx.cat.scan_entries(
         ctx.spark, adm.touched, schemas.FRONTIER
@@ -764,11 +759,11 @@ def _next_hosts(ctx: _WaveCtx, adm: _Admitted, new_read: DataFrame,
     # bit-exactly at read time — so their files carry byte-untouched in
     # the manifest, the same trick the frontier uses.  A throttled wave
     # late in a big crawl writes O(touched hosts), not O(hosts).  Every
-    # cfg.hosts_compact_every waves the split is bypassed (full
-    # rewrite), bounding the refill fold depth.
+    # HOSTS_COMPACT_EVERY waves the split is bypassed (full rewrite),
+    # bounding the refill fold depth.
     spark, cat, cfg, wave = ctx.spark, ctx.cat, ctx.cfg, ctx.wave
     files = cat.table_files("hosts")
-    if cfg.hosts_compact_every > 0 and wave % cfg.hosts_compact_every == 0:
+    if HOSTS_COMPACT_EVERY > 0 and wave % HOSTS_COMPACT_EVERY == 0:
         hit, carried = files, []
     else:
         hit = icelite.entries_overlapping_segs(
@@ -930,8 +925,8 @@ def run_crawl(spark: SparkSession, root: str, cfg: EngineConfig) -> Catalog:
             # fragment each hash segment across ~W files after W waves;
             # compaction restores one-file-per-segment pruning in one
             # content-preserving atomic snapshot.
-            if (cfg.seen_compact_every > 0 and snap.wave > 0
-                    and snap.wave % cfg.seen_compact_every == 0
+            if (SEEN_COMPACT_EVERY > 0 and snap.wave > 0
+                    and snap.wave % SEEN_COMPACT_EVERY == 0
                     and snap.wave < cfg.n_waves):
                 compact_table(spark, cat, "seen", schemas.SEEN,
                               cluster_col="url_hash",

@@ -135,8 +135,8 @@ def q_csv_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     """CSV sink+source: write `nation` as CSV, read it back with an
     explicit schema, aggregate.  Ints and quoted strings survive the
     text format exactly, so the DuckDB oracle (reading the original
-    parquet) value-checks the whole write→read→agg pipeline — the same
-    upgrade orc_roundtrip received (was rows-only through r4)."""
+    parquet) value-checks the whole write→read→agg pipeline, as it does
+    for orc_roundtrip."""
     (nation,) = load(spark, sf, "nation")
     path = _roundtrip_dir(sf, "csv")
     nation.coalesce(1).write.mode("overwrite").option("header", True).csv(path)
@@ -158,7 +158,7 @@ FROM nation GROUP BY n_regionkey
 def q_json_roundtrip(spark: SparkSession, sf: str) -> DataFrame:
     """JSON-lines sink+source round-trip over `region` — values survive
     the JSON escape round-trip exactly, so the DuckDB oracle on the
-    original parquet checks them (was rows-only through r4)."""
+    original parquet checks them."""
     (region,) = load(spark, sf, "region")
     path = _roundtrip_dir(sf, "json")
     region.coalesce(1).write.mode("overwrite").json(path)

@@ -82,7 +82,6 @@ GATE_ORDER = [
 # Rows-only-by-design entries allowed inside the gate window (no DuckDB
 # oracle can express them; the driver records a rows>0 check instead).
 GATE_ROWS_ONLY_OK = {
-    "video_frame_sample",
     "approx_distinct",
     "search_stemmed_index",
     "hll_sketch_distinct",

@@ -17,29 +17,27 @@ def _urls(spark, prefix, n):
     ).withColumn("url_hash", murmur64_col(F.col("canon_url")))
 
 
-def test_probe_paths_agree(spark):
+def test_probe_paths_agree(spark, monkeypatch):
     """Both physical probe strategies (broadcast mapInPandas vs cogroup
     shuffle) produce IDENTICAL verdicts on the same shards + candidates
     — compared row by row, not just free of false negatives."""
-    mk = lambda bcast: EngineConfig(  # noqa: E731
-        bloom_shards=4, bloom_nbits=1 << 16, bloom_k=5,
-        bloom_broadcast_max_bytes=bcast)
-    cfg_bcast, cfg_cogroup = mk(64 << 20), mk(0)
+    cfg = EngineConfig(bloom_shards=4, bloom_nbits=1 << 16, bloom_k=5)
     inserted = _urls(spark, "in", 1000)
     empty = spark.createDataFrame([], S.BLOOM_SHARDS)
-    shards = bloom.build_shards(inserted, empty, cfg_bcast)
+    shards = bloom.build_shards(inserted, empty, cfg)
     shards.persist().count()
     mixed = inserted.unionByName(_urls(spark, "out", 1000))
 
     bcs: list = []
 
-    def verdicts(cfg):
+    def verdicts(max_bytes):
+        monkeypatch.setattr(bloom, "BROADCAST_MAX_BYTES", max_bytes)
         return sorted(
             (r["canon_url"], r["maybe_seen"])
             for r in bloom.probe(mixed, shards, cfg, broadcasts=bcs).collect())
 
-    got_bcast = verdicts(cfg_bcast)
-    got_cogroup = verdicts(cfg_cogroup)
+    got_bcast = verdicts(64 << 20)
+    got_cogroup = verdicts(0)
     assert got_bcast == got_cogroup
     # inserted rows must all be maybe_seen (no false negatives)
     assert all(seen for url, seen in got_bcast if "/in/" in url)

@@ -84,8 +84,8 @@ def test_failed_wave_is_resumable(spark, monkeypatch):
 
 def test_wave_metrics_carry_the_bench_keys(spark):
     """The committed wave metrics carry every key perfbench/crawl_wide.py
-    and tools/skew_drive.py read.  They read phases and write_secs with
-    .get(name, 0.0), so a renamed key would silently read 0."""
+    reads.  It reads phases and write_secs with .get(name, 0.0), so a
+    renamed key would silently read 0."""
     root = tempfile.mkdtemp(prefix="icelite-metrics-")
     try:
         cat = run_crawl(spark, root,
@@ -105,12 +105,11 @@ def test_wave_metrics_carry_the_bench_keys(spark):
         shutil.rmtree(root, ignore_errors=True)
 
 
-@pytest.mark.parametrize("knob", [{"arrow_batch_rows": 2048},
-                                  {"bloom_broadcast_max_bytes": 0}],
+@pytest.mark.parametrize("knob", [{"arrow_batch_rows": 2048}],
                          ids=lambda k: next(iter(k)))
 def test_plan_only_knob_keeps_config_hash(knob):
-    """The fetch's Arrow batch size and the bloom probe strategy change
-    no table, so resuming with a different value must be allowed."""
+    """The fetch's Arrow batch size changes no table, so resuming with a
+    different value must be allowed."""
     assert EngineConfig(**knob).config_hash() == EngineConfig().config_hash()
 
 

@@ -13,6 +13,7 @@ import pytest
 import commentsearchengine_spark.schemas as S
 from commentsearchengine_spark.config import EngineConfig
 from commentsearchengine_spark.functions import imagecodec as ic
+from commentsearchengine_spark.plans import wave
 from commentsearchengine_spark.plans.wave import run_crawl
 from commentsearchengine_spark.sources.icelite import Catalog
 from oracle.seqcrawl import run_oracle
@@ -98,15 +99,35 @@ def test_exact_match_spread_scaled(spark):
         shutil.rmtree(root, ignore_errors=True)
 
 
-def test_exact_match_shuffle_backstop(spark):
+def test_exact_match_shuffle_backstop(spark, monkeypatch):
     """Forcing the backstop's shuffle anti-join fallback (broadcast
     threshold 0) and the cogrouped admission rewrite preserves oracle
     parity — the strategy switch is plan-only, never semantic."""
-    cfg = EngineConfig(n_seeds=25, n_waves=3, n_buckets=32,
-                       backstop_broadcast_max_rows=0)
+    monkeypatch.setattr(wave, "BROADCAST_MAX_ROWS", 0)
+    cfg = EngineConfig(n_seeds=25, n_waves=3, n_buckets=32)
     cat, root = _run_engine(spark, cfg)
     try:
         o = run_oracle(25, 3, 32, cfg.n_hosts)
+        _assert_match(spark, cat, o)
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def test_hot_host_fetch_is_balanced(spark):
+    """Op P0b: a wave whose every admission is on one host still spreads
+    evenly over the fetch tasks (one pages file each), because the fetch
+    repartitions on each row's url_hash.  The slowest fetch task sets
+    the fetch's wall time, so the fullest file may hold at most 15% more
+    rows than the mean."""
+    cfg = EngineConfig(n_seeds=4000, n_waves=1, n_buckets=16,
+                       budget_scale=512.0)
+    cat, root = _run_engine(spark, cfg)
+    try:
+        rows = [e["rows"] for e in cat.table_files("pages")]
+        assert len(rows) == spark.sparkContext.defaultParallelism
+        assert sum(rows) >= 2000
+        assert max(rows) / (sum(rows) / len(rows)) <= 1.15, rows
+        o = run_oracle(4000, 1, 16, cfg.n_hosts, budget_scale=512.0)
         _assert_match(spark, cat, o)
     finally:
         shutil.rmtree(root, ignore_errors=True)
@@ -228,16 +249,15 @@ def test_hosts_carry_forward_throttled(spark):
         shutil.rmtree(root, ignore_errors=True)
 
 
-def test_hosts_compaction_cadence_is_plan_only(spark):
-    """hosts_compact_every changes file staleness, never results: the
-    crawl log, seen set, and effective balances are identical at any
-    cadence (here: compact every wave vs the default 16)."""
-    cfg_a = EngineConfig(n_seeds=25, n_waves=3, n_buckets=32,
-                         hosts_compact_every=1)
-    cfg_b = EngineConfig(n_seeds=25, n_waves=3, n_buckets=32)
-    assert cfg_a.config_hash() == cfg_b.config_hash()  # plan-only knob
-    o = run_oracle(25, 3, 32, cfg_a.n_hosts)
-    for cfg in (cfg_a, cfg_b):
+def test_hosts_compaction_cadence_is_plan_only(spark, monkeypatch):
+    """The hosts compaction cadence changes file staleness, never
+    results: the crawl log, seen set, and effective balances are
+    identical at any cadence (here: compact every wave vs the default
+    16)."""
+    cfg = EngineConfig(n_seeds=25, n_waves=3, n_buckets=32)
+    o = run_oracle(25, 3, 32, cfg.n_hosts)
+    for every in (1, wave.HOSTS_COMPACT_EVERY):
+        monkeypatch.setattr(wave, "HOSTS_COMPACT_EVERY", every)
         cat, root = _run_engine(spark, cfg)
         try:
             _assert_match(spark, cat, o)

@@ -107,12 +107,12 @@ def test_compact_frontier_preserves_tiers_and_parity(spark):
 
 
 def test_auto_compaction_every_wave_keeps_parity(spark, monkeypatch):
-    """seen_compact_every=1 (compact between every wave) is plan-only:
-    the crawl matches the oracle bit-for-bit and the knob stays out of
-    config_hash.  The default min_files guard would skip this tiny
-    fixture, so the test lowers it through a recording wrapper to force
-    real compactions inside the loop."""
+    """Compacting seen between every wave is plan-only: the crawl
+    matches the oracle bit-for-bit.  The default min_files guard would
+    skip this tiny fixture, so the test lowers it through a recording
+    wrapper to force real compactions inside the loop."""
     import commentsearchengine_spark.plans.maintenance as m
+    from commentsearchengine_spark.plans import wave
 
     real = m.compact_table
     calls: list[dict] = []
@@ -124,10 +124,8 @@ def test_auto_compaction_every_wave_keeps_parity(spark, monkeypatch):
         return out
 
     monkeypatch.setattr(m, "compact_table", forcing)
-    cfg = EngineConfig(n_seeds=25, n_waves=3, n_buckets=32,
-                       seen_compact_every=1)
-    assert cfg.config_hash() == EngineConfig(
-        n_seeds=25, n_waves=3, n_buckets=32).config_hash()
+    monkeypatch.setattr(wave, "SEEN_COMPACT_EVERY", 1)
+    cfg = EngineConfig(n_seeds=25, n_waves=3, n_buckets=32)
     root = tempfile.mkdtemp(prefix="icelite-autocompact-")
     try:
         cat = run_crawl(spark, root, cfg)
